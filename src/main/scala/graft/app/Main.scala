@@ -21,47 +21,9 @@ object Main {
       maintenanceRun = spec0.maintenanceRun || maintenance)
 
     // spark-submit injects spark.master; standalone runs default to local.
-    val master = sys.props.get("spark.master")
-      .orElse(sys.env.get("SPARK_MASTER"))
-      .getOrElse(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName(s"synapse-cdm-stream:${spec.entityName}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      // Long-lived micro-batch streams re-plan the same query shapes every
-      // trigger; Spark's default 100-entry generated-class cache thrashes
-      // across the pipeline's distinct stages and re-pays Janino
-      // compilation (~0.2-0.5 s per stage) every trigger. Sized to hold
-      // the full working set; env-overridable for memory-tight drivers.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // Committer v2 + no _SUCCESS markers: task commits move files into
-      // the output directly instead of a serial driver-side job-commit
-      // rename pass (O(write tasks) renames per commit at stream
-      // cadence). Safe HERE because atomicity/visibility comes from the
-      // MANIFEST commit, not the job commit: a failed write job's
-      // partial task files live in a commit-UUID dir no snapshot ever
-      // references (a retry uses a fresh UUID; remove_orphan_files reaps
-      // them), and nothing reads _SUCCESS (manifests list part- files
-      // explicitly). Measured: −25% per bucketed write job.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // Pinned OFF explicitly (it is the default) because the v2-committer
-      // safety argument above leans on it: the post-job manifest listing
-      // records every file in the commit-UUID dir as live data, which is
-      // only sound when exactly one attempt per task commits — v2 task
-      // commits are coordinator-arbitrated, but SPECULATIVE duplicate
-      // attempts racing nondeterministic recomputation into different
-      // gbk= partitions could leave an orphan part- file inside the live
-      // commit dir. Deterministic bucketing (repartition by gbk of
-      // deterministic input) plus no speculation closes that window.
-      .config("spark.speculation", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession(s"synapse-cdm-stream:${spec.entityName}",
+      master = sys.props.get("spark.master").orElse(sys.env.get("SPARK_MASTER")),
+      keepUi = true)
 
     val exit = try run(spark, spec) finally spark.stop()
     if (exit != 0) sys.exit(exit)

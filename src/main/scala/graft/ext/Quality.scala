@@ -143,34 +143,21 @@ object Quality {
     // background threads while the fused agg runs on this one (guide
     // §2.6: actions are only sequential because the driver calls them
     // sequentially; each job's stage tail back-fills the other's cores).
-    // Fresh threads inherit the caller's job group/description.
-    val fkFutures: Seq[(ForeignKey, java.util.concurrent.FutureTask[Long])] =
-      fkRules.map { r =>
-        val task = new java.util.concurrent.FutureTask[Long](() =>
-          df.select(col(r.column).as("_fk")).where(col("_fk").isNotNull)
-            .join(r.parent.select(col(r.parentColumn).as("_fk")).distinct(), Seq("_fk"), "left_anti")
-            .count())
-        val t = new Thread(task, s"graft-dq-fk-${r.name}")
-        t.setDaemon(true)
-        t.start()
-        (r, task)
-      }
-    val fusedRow: Option[org.apache.spark.sql.Row] =
-      if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).head())
+    // Every job is joined before a failure propagates.
+    val (orphans, fusedRow) = graft.tables.SnapshotTable.inParallel(
+      graft.tables.SnapshotTable.allConcurrently(fkRules.map { r => () =>
+        df.select(col(r.column).as("_fk")).where(col("_fk").isNotNull)
+          .join(r.parent.select(col(r.parentColumn).as("_fk")).distinct(), Seq("_fk"), "left_anti")
+          .count()
+      }),
+      if (aggs.isEmpty) None else Some(df.agg(aggs.head, aggs.tail: _*).head()))
     def g(n: String): Long = fusedRow
       .flatMap(r => Option(r.getAs[Any](n))).map(_.asInstanceOf[Long]).getOrElse(0L)
 
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     rowRules.foreach { case (n, _, _) => out += ((n, g(s"v:$n"), g(s"c:$n"))) }
     uniqueRules.foreach { r => out += ((r.name, g(s"un:${r.name}") - g(s"ud:${r.name}"), g(s"un:${r.name}"))) }
-    fkFutures.foreach { case (r, task) =>
-      // unwrap ExecutionException so a failing FK count surfaces the SAME
-      // exception type the sequential formulation threw
-      val orphans =
-        try task.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      out += ((r.name, orphans, g(s"fc:${r.name}")))
-    }
+    fkRules.zip(orphans).foreach { case (r, n) => out += ((r.name, n, g(s"fc:${r.name}"))) }
     out.toSeq.toDF("rule", "violations", "checked").orderBy(col("rule"))
   }
 

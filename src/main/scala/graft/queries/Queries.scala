@@ -54,27 +54,19 @@ object Queries {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  private def readParquetCached(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readParquetCached(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig =
       try {
-        val st = fs.getFileStatus(p)
         // SESSION-scoped key (identityHashCode prefix): inference depends
         // on session conf (nanosAsLong, timestamp inference mode), so a
         // JVM hosting two differently-configured sessions (test suites)
         // must never serve one session's inferred schema to the other.
         // Each engine main is single-session, so nothing is lost.
-        val sess = s"${System.identityHashCode(spark)}:"
-        if (st.isFile) s"$sess$path:${st.getLen}:${st.getModificationTime}"
-        else fs.listStatus(p)
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .sortBy(_.getPath.getName)
+        dataFiles(fs, p)
           .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-          .mkString(s"$sess$path|", "|", "")
+          .mkString(s"${System.identityHashCode(spark)}:$path|", "|", "")
       } catch {
         // missing path etc.: let the inferring reader raise its own error
         case _: java.io.IOException => return spark.read.parquet(path)
@@ -86,27 +78,38 @@ object Queries {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquetCached(spark, s"$dir/$name.parquet")
 
-  /** Metadata-only row count of a parquet table (file or dir): the sum of
-    * parquet FOOTER record counts over the same non-hidden files Spark
-    * would scan — exactly the number `df.count()` returns, without a scan
-    * job over the data pages (guide §1.2: don't run a full pass for a
-    * number the footers already hold). Used by gate fixtures that only
-    * need a segment boundary derived from the total row count.
+  /** The data files of a parquet table (a file, or a FLAT directory of
+    * them): the non-hidden files Spark would scan, sorted by name. A
+    * table directory holding a subdirectory fails loudly instead of
+    * being undercounted or keying a stale cached schema.
     */
-  private def parquetRowCount(spark: SparkSession, path: String): Long = {
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val st = fs.getFileStatus(p)
+    if (st.isFile) Seq(st)
+    else {
+      val visible = fs.listStatus(p).toSeq.filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }
+      visible.find(_.isDirectory).foreach(d => throw new IllegalStateException(
+        s"parquet table $p is not flat: it holds the directory ${d.getPath.getName}"))
+      visible.sortBy(_.getPath.getName)
+    }
+  }
+
+  /** Metadata-only row count of a parquet table (file or flat dir): the
+    * sum of parquet FOOTER record counts over [[dataFiles]] — exactly the
+    * number `df.count()` returns, without a scan job over the data pages
+    * (guide §1.2: don't run a full pass for a number the footers already
+    * hold). Used by gate fixtures that only need a segment boundary
+    * derived from the total row count.
+    */
+  private[graft] def parquetRowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isFile) Seq(p)
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-        .map(_.getPath)
-    files.map(graft.tables.FileStats.parquetRowCount(conf, _)).sum
+    dataFiles(p.getFileSystem(conf), p)
+      .map(s => graft.tables.FileStats.parquetRowCount(conf, s.getPath)).sum
   }
 
   /** Dataset.unpersist is a NO-OP on a localCheckpoint'd frame (it only
@@ -126,7 +129,7 @@ object Queries {
     * the reader adapts to the file's physical type instead of assuming
     * one. NANOS: Spark's vectorized reader rejects it, so with
     * `spark.sql.legacy.parquet.nanosAsLong=true` set at session build
-    * (Main/Bench/Verify and the test session all do — a query function
+    * (every EngineSession does — a query function
     * must not mutate shared-session config) it arrives as a long, which
     * we truncate to a micros timestamp (invisible at the second/hour
     * granularity the queries use, and matching DuckDB's nanos-native

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine SQL extensions — registered with
   * `spark.sql.extensions=graft.sql.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions`). Injects the custom codegen'd /
+  * `withExtensions` on a session builder). Injects the custom codegen'd /
   * single-pass expressions used by the similarity and dedup operators.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1826,27 +1826,38 @@ object SnapshotTable {
     })
   private val footerIoEc = scala.concurrent.ExecutionContext.fromExecutor(footerIoPool)
 
-  /** Run two independent Spark actions concurrently and return both
-    * results; either failure propagates after both complete (no abandoned
-    * in-flight job). `a` runs on a FRESH thread so it inherits the
-    * caller's InheritableThreadLocal Spark properties (job group/
-    * description — a shared pool would freeze its first caller's); `b`
-    * runs on the calling thread.
+  /** Run independent Spark actions concurrently and return their results
+    * in order. Every action but the last runs on a FRESH thread so it
+    * inherits the caller's InheritableThreadLocal Spark properties (job
+    * group/description — a shared pool would freeze its first caller's);
+    * the last runs on the calling thread. Every action is joined before
+    * this returns or throws (no abandoned in-flight job); the first
+    * failure in argument order is rethrown with the others suppressed.
     */
-  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val ra = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
-    val t = new Thread(
-      () => ra.set(try Right(a) catch { case e: Throwable => Left(e) }),
-      "graft-commit-write")
-    t.setDaemon(true)
-    t.start()
-    val rb = try Right(b) catch { case e: Throwable => Left(e) }
-    t.join()
-    (ra.get(), rb) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(e), _)         => throw e
-      case (_, Left(e))         => throw e
+  private[graft] def allConcurrently[A](actions: Seq[() => A]): Seq[A] = {
+    def attempt(act: () => A): Either[Throwable, A] = try Right(act()) catch { case e: Throwable => Left(e) }
+    val forked = actions.dropRight(1).map { act =>
+      val r = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+      val t = new Thread(() => r.set(attempt(act)), "graft-concurrent-action")
+      t.setDaemon(true)
+      t.start()
+      (t, r)
     }
+    val last = actions.lastOption.map(attempt)
+    forked.foreach(_._1.join())
+    val results = forked.map(_._2.get()) ++ last
+    results.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.foreach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      case _ => results.collect { case Right(x) => x }
+    }
+  }
+
+  /** Two independent actions: `a` on a fresh thread, `b` on this one. */
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(x, y) = allConcurrently[Any](Seq(() => a, () => b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
   }
 
   private[tables] def parallelFooterIo[A, B](xs: Seq[A])(f: A => B): Seq[B] =

@@ -1977,4 +1977,22 @@ class ExtOpsSpec extends SparkSpec {
     val kept = Dedup.dedupExactIncrementFast(idx, fresh).count()
     assert(kept >= 390, s"false-positive rate too high: kept $kept/400")
   }
+
+  test("Quality.check: a rule failing at execution returns only after every FK job ended") {
+    import graft.ext.Quality._
+    val slow = udf { (id: Long) =>
+      QualityFkProbe.started.incrementAndGet(); Thread.sleep(200)
+      QualityFkProbe.finished.incrementAndGet(); id
+    }.asNondeterministic()
+    val parent = spark.range(0, 4, 1, 4).select(slow(col("id")).as("pk"))
+    intercept[Exception] {
+      check(Seq(1L, 2L, 3L).toDF("k"),
+        Seq(Predicate("boom", raise_error(lit("boom")).isNull), ForeignKey("k", parent, "pk")))
+    }
+    val (started, finished) = (QualityFkProbe.started.get(), QualityFkProbe.finished.get())
+    assert(finished >= 4 && started == finished, s"FK job still running: $started started, $finished finished")
+  }
 }
+
+/** Task-side counters for the FK-join probe above (same JVM under local[N]). */
+object QualityFkProbe { val started, finished = new java.util.concurrent.atomic.AtomicInteger() }

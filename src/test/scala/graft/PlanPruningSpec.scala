@@ -84,4 +84,17 @@ class PlanPruningSpec extends SparkSpec {
         s"$name plans a cross product:\n$plan")
     }
   }
+
+  test("an input table directory holding a subdirectory fails loudly, naming it") {
+    val dir = tmpDir("nested-table")
+    spark.range(10).write.mode("overwrite").parquet(s"$dir/t")
+    assert(Queries.parquetRowCount(spark, s"$dir/t") == 10L)
+    assert(Queries.readParquetCached(spark, s"$dir/t").count() == 10L)
+    spark.range(5).write.parquet(s"$dir/t/nested")
+    Seq[() => Any](() => Queries.parquetRowCount(spark, s"$dir/t"),
+      () => Queries.readParquetCached(spark, s"$dir/t")).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(s"$dir/t") && e.getMessage.contains("nested"), e.getMessage)
+    }
+  }
 }

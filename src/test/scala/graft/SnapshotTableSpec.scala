@@ -1008,4 +1008,22 @@ class SnapshotTableSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException] { t2.adoptFiles(badParts2) }
     assert(e2.getMessage.contains("versionnumber"))
   }
+
+  test("allConcurrently joins every action and rethrows the first failure, others suppressed") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.allConcurrently[Unit](Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(300); slowDone.set(true) },
+        () => throw new IllegalArgumentException("second")))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(slowDone.get(), "a failure must not return before every action ends")
+    val both = intercept[IllegalStateException] {
+      SnapshotTable.inParallel(throw new IllegalStateException("a"), throw new IllegalArgumentException("b"))
+    }
+    assert(both.getMessage == "a" && both.getSuppressed.map(_.getMessage).toSeq == Seq("b"))
+    assert(SnapshotTable.inParallel(1, "x") == ((1, "x")))
+  }
 }
