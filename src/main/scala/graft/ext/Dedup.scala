@@ -1047,15 +1047,6 @@ object Dedup {
         (coalesce(col("n_overlaps"), lit(0L)) > 0).as("contaminated"))
   }
 
-  // ------------------------------------------------------ n-gram Jaccard
-
-  /** Exact n-gram Jaccard similarity of two texts (columnar). */
-  def ngramJaccard(textA: Column, textB: Column, n: Int = 1): Column = {
-    val (sa, sb) = (if (n <= 1) tokenSet(textA) else wordShingles(textA, n),
-      if (n <= 1) tokenSet(textB) else wordShingles(textB, n))
-    size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb)).cast("double")
-  }
-
   // --------------------------------------------- incremental near-dup
 
   /** Near-duplicate pairs between a (huge) `corpus` and a (small-by-

@@ -48,15 +48,6 @@ object TextAnalysis {
         size(toks).cast("double"))
   }
 
-  /** Mean whitespace-token length — long "words" signal non-text noise. */
-  def meanTokenLength(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    when(length(trim(text)) === 0, lit(0.0))
-      .otherwise(
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-          size(toks).cast("double"))
-  }
-
   /** DOCUMENT CHUNKING — split long documents into fixed-size token
     * windows with overlap, the standard context-window preparation step
     * (the inverse of [[Datasets.packSequences]], which concatenates short

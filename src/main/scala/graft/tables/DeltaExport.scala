@@ -78,39 +78,6 @@ object DeltaExport {
     */
   final case class BucketSpec(sourceColumn: String, n: Int)
 
-  /** Canonical DECODED URI path of a data file — the ONE normalization
-    * both sides of every path join must use. Scan-side
-    * `_metadata.file_path` is scheme-prefixed, PERCENT-ENCODED, and
-    * keeps the filesystem authority (`hdfs://nn:8020/x`,
-    * `file:/tmp/a%20b/x`); driver-side Hadoop Path strings are unencoded.
-    * Both reduce here to the decoded path with scheme AND authority
-    * stripped. The previous regex (`^scheme:/+` → `/`) kept the
-    * authority as a path segment on the scan side but the driver side
-    * dropped it — on any authority-bearing filesystem (hdfs, s3a, abfs)
-    * the joins matched NOTHING: exported DVs silently vanished and
-    * partitioned replays returned zero rows. Local `file:/` paths have
-    * no authority, which is why tests never saw it.
-    *
-    * `url_decode` speaks application/x-www-form-urlencoded, where a bare
-    * `'+'` decodes to a SPACE — but URI percent-encoding (what
-    * `_metadata.file_path` carries) leaves `'+'` literal, and the
-    * driver-side twin `Path.toUri.getPath` preserves it. Without the
-    * re-escape below, any table location containing `'+'` hits the same
-    * silent-vanish class this normalization exists to prevent: the two
-    * sides disagree on the character and every path join matches nothing.
-    */
-  private[tables] def canonicalPathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.url_decode(
-      org.apache.spark.sql.functions.regexp_replace(
-        org.apache.spark.sql.functions.regexp_replace(
-          c, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""),
-        "\\+", "%2B"))
-
-  /** Driver-side twin of [[canonicalPathCol]]: `Path.toUri.getPath` is
-    * the decoded, scheme-and-authority-free path.
-    */
-  private[tables] def canonicalPath(u: String): String = new Path(u).toUri.getPath
-
   private def logDir(exportDir: Path) = new Path(exportDir, "_delta_log")
   private def commitName(v: Long) = f"$v%020d.json"
   private def checkpointName(v: Long) = f"$v%020d.checkpoint.parquet"
@@ -958,19 +925,16 @@ object DeltaExport {
     target
   }
 
-  /** Latest exported engine snapshot version, if any — the per-commit
-    * exporter's idempotence probe.
-    */
-  def currentExportedSnapshot(fs: FileSystem, exportDir: Path): Option[Long] =
-    replay(fs, exportDir, at = None).map(_.graftSnapshot).filter(_ >= 0)
+  private def replayed(fs: FileSystem, exportDir: Path, at: Option[Long]): LogState =
+    replay(fs, exportDir, at).getOrElse(
+      throw new IllegalArgumentException(s"no delta log under $exportDir"))
 
   /** Live (uri, size) file set at `at` (None = head), by log replay only —
     * the reader half used by the gate, which must see the table
     * EXCLUSIVELY through the exported log.
     */
   def readFiles(fs: FileSystem, exportDir: Path, at: Option[Long] = None): Seq[(String, Long)] = {
-    val st = replay(fs, exportDir, at).getOrElse(
-      throw new IllegalArgumentException(s"no delta log under $exportDir"))
+    val st = replayed(fs, exportDir, at)
     // a DV'd file's PHYSICAL rows over-count its live rows: a raw file
     // list would silently resurrect deleted rows for any consumer that
     // scans the files directly (adoptDeltaTable's exact failure mode) —
@@ -996,8 +960,7 @@ object DeltaExport {
       // lower it to pin the distributed-decode + shuffle degradation path
       dvDriverBound: Long = 2000000L): DataFrame = {
     val fs = exportDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = replay(fs, exportDir, at).getOrElse(
-      throw new IllegalArgumentException(s"no delta log under $exportDir"))
+    val st = replayed(fs, exportDir, at)
     liveRows(spark, fs, st, st.files, dvDriverBound)
   }
 
@@ -1017,8 +980,7 @@ object DeltaExport {
       at: Option[Long] = None, dvDriverBound: Long = 2000000L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = exportDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = replay(fs, exportDir, at).getOrElse(
-      throw new IllegalArgumentException(s"no delta log under $exportDir"))
+    val st = replayed(fs, exportDir, at)
     val (srcName, kept) = pruneForKey(st, exportDir, key)
     liveRows(spark, fs, st, kept, dvDriverBound).where(col(srcName) === lit(key))
   }
@@ -1031,8 +993,7 @@ object DeltaExport {
   def plannedFilesForKey(spark: SparkSession, exportDir: Path, key: Any)
       : (Seq[String], Seq[String]) = {
     val fs = exportDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = replay(fs, exportDir, None).getOrElse(
-      throw new IllegalArgumentException(s"no delta log under $exportDir"))
+    val st = replayed(fs, exportDir, None)
     val (_, kept) = pruneForKey(st, exportDir, key)
     (kept.keys.toSeq.sorted, st.files.keys.toSeq.sorted)
   }
@@ -1050,142 +1011,70 @@ object DeltaExport {
       sys.error(s"bucket source column '$src' not in the published schema"))
     val b = IcebergExport.bucketOfKey(field.dataType, key, n).toString
     val pname = st.partitionColumns.head
-    (src, st.files.filter { case (_, a) =>
-      a.partitionValues.get(pname) match {
-        case None          => true  // no claim: must scan
-        case Some(None)    => false // null-key partition: key = <v> can't match
-        case Some(Some(v)) => v == b
-      }
-    })
+    (src, st.files.filter { case (_, a) => LiveScan.bucketMatches(a.partitionValues.get(pname), b) })
   }
 
   /** Build the live-row frame for a (possibly pruned) subset of the
-    * replayed adds: one scan, partition tuples from the log, DVs of the
-    * SUBSET applied under the driver/broadcast bound.
+    * replayed adds: partition tuples from the log, DVs of the SUBSET
+    * applied by (file, row index).
     */
   private def liveRows(spark: SparkSession, fs: FileSystem, st: LogState,
       files: Map[String, AddInfo], dvDriverBound: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
+    import spark.implicits._
     val schema = DataType.fromJson(st.schemaString).asInstanceOf[StructType]
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-    // deletion vectors: decoded driver-side (bounded by the deleted-row
-    // count — change-set-sized by construction) and applied as ONE
-    // broadcast anti join on (file, row_index), the same plan shape as
-    // the Iceberg leg's position deletes
+    val scanFiles = files.toSeq.sortBy(_._1).map { case (u, a) =>
+      ScanFile(u, a.size, tuple = st.partitionColumns.map(pc => a.partitionValues.get(pc).flatten))
+    }
     val dvFiles = files.toSeq.collect { case (u, a) if a.dv.isDefined => (u, a.dv.get) }
-    val needDv = dvFiles.nonEmpty
-    def withMeta(df: DataFrame): DataFrame =
-      if (!needDv) df
-      else df.withColumn("_gpath", canonicalPathCol(col("_metadata.file_path")))
-        .withColumn("_gpos", col("_metadata.row_index"))
-
-    // The log's add actions carry each file's mandatory `size`, so the
-    // scan skips Spark's listing round (no getFileStatus per file, no
-    // listing job past 32 paths) — an external Delta reader resolves the
-    // same scan from the log alone.
-    def manifestScan(readSchema: StructType): DataFrame =
-      // `size` is mandatory in the protocol and a parquet file is never
-      // 0 bytes; a log that violates that falls back to the listing
-      // reader rather than risking a length-truncated scan.
-      if (files.valuesIterator.forall(_.size > 0))
-        org.apache.spark.sql.GraftManifestRead.read(spark, "parquet", readSchema,
-          files.toSeq.sortBy(_._1).map { case (p, a) => (new Path(p), a.size) })
-      else spark.read.schema(readSchema).parquet(files.keys.toSeq.sorted: _*)
-    val base: DataFrame =
-      if (st.partitionColumns.isEmpty)
-        withMeta(manifestScan(schema))
+    // The driver decodes DVs only while the summed cardinality — read
+    // from the DESCRIPTORS, so no decode is needed to decide — is
+    // change-set-sized (then the positions broadcast); past the bound the
+    // decode moves to executors and the anti join degrades LOUDLY to a
+    // shuffle, so a deferred-OPTIMIZE backlog can neither OOM the driver
+    // nor blow a broadcast (the read-side mirror of writeDvsDistributed's
+    // export-side bound).
+    val totalDeleted = dvFiles.map(_._2.cardinality).sum
+    val pos = if (dvFiles.isEmpty) None
+      else if (totalDeleted <= dvDriverBound) Some(LiveScan.PositionDeletes(
+        dvFiles.flatMap { case (u, d) =>
+          val p = LiveScan.canonicalPath(u)
+          readDv(fs, d).map(i => (p, i))
+        }.toDF("_dpath", "_dpos"), seqScoped = false))
       else {
-        // data files do NOT hold the partition columns: ONE scan of every
-        // live file with the data schema, then the tuple attached via a
-        // broadcast join on the normalized file path (the per-TUPLE
-        // union-of-scans this replaces planned one scan node per bucket —
-        // fine at 33 buckets, pathological at a 100 TB table's 1024). The
-        // broadcast is the log's own (path → tuple) map, O(files) rows of
-        // (string, int) — metadata-sized, the same order as the file
-        // listing Spark already broadcasts to schedule the scan.
-        val pset = st.partitionColumns.toSet
-        val dataSchema = StructType(schema.fields.filterNot(f => pset.contains(f.name)))
-        val tupleSchema = StructType(
-          org.apache.spark.sql.types.StructField("_tpath",
-            org.apache.spark.sql.types.StringType) +:
-            st.partitionColumns.map(pc => org.apache.spark.sql.types.StructField(
-              s"${pc}__str", org.apache.spark.sql.types.StringType)))
-        val tupleRows: java.util.List[org.apache.spark.sql.Row] =
-          files.toSeq.sortBy(_._1).map { case (u, a) =>
-            org.apache.spark.sql.Row.fromSeq(
-              canonicalPath(u) +:
-                st.partitionColumns.map(pc => a.partitionValues.get(pc).flatten.orNull))
-          }.asJava
-        val tupleDf = spark.createDataFrame(tupleRows, tupleSchema)
-        var df = withMeta(manifestScan(dataSchema))
-          .withColumn("_tpath", canonicalPathCol(col("_metadata.file_path")))
-          .join(broadcast(tupleDf), Seq("_tpath"))
-        st.partitionColumns.foreach { pc =>
-          val f = schema.fields.find(_.name == pc).getOrElse(
-            throw new IllegalStateException(s"partition column '$pc' missing from schemaString"))
-          df = df.withColumn(pc, col(s"${pc}__str").cast(f.dataType)).drop(s"${pc}__str")
+        System.err.println(s"DELTA READ: $totalDeleted outstanding deleted positions " +
+          "exceed the driver/broadcast bound — decoding DVs on executors and " +
+          "degrading to a shuffle anti join (still exact; compact the source " +
+          "to clear the backlog)")
+        val confBytes = {
+          val baos = new java.io.ByteArrayOutputStream()
+          spark.sparkContext.hadoopConfiguration.write(new java.io.DataOutputStream(baos))
+          baos.toByteArray
         }
-        df.drop("_tpath")
-      }
-    val live =
-      if (!needDv) base
-      else {
-        // The driver decodes DVs only while the summed cardinality — read
-        // from the DESCRIPTORS, so no decode is needed to decide — is
-        // change-set-sized; past the bound the decode moves to executors
-        // and the anti join degrades LOUDLY to a shuffle, so a
-        // deferred-OPTIMIZE backlog can neither OOM the driver nor blow a
-        // broadcast (the read-side mirror of writeDvsDistributed's
-        // export-side bound).
-        import spark.implicits._
-        val totalDeleted = dvFiles.map(_._2.cardinality).sum
-        if (totalDeleted <= dvDriverBound) {
-          val deleted: Seq[(String, Long)] = dvFiles.flatMap { case (u, d) =>
-            val p = canonicalPath(u)
-            readDv(fs, d).map(pos => (p, pos))
-          }
-          base.join(broadcast(deleted.toDF("_dpath", "_dpos")),
-            base("_gpath") === col("_dpath") && base("_gpos") === col("_dpos"), "left_anti")
-        } else {
-          System.err.println(s"DELTA READ: $totalDeleted outstanding deleted positions " +
-            "exceed the driver/broadcast bound — decoding DVs on executors and " +
-            "degrading to a shuffle anti join (still exact; compact the source " +
-            "to clear the backlog)")
-          val confBytes = {
-            val baos = new java.io.ByteArrayOutputStream()
-            spark.sparkContext.hadoopConfiguration.write(new java.io.DataOutputStream(baos))
-            baos.toByteArray
-          }
-          val descRows = dvFiles.map { case (u, d) =>
-            (canonicalPath(u), d.storageType, d.pathOrInlineDv, d.offset,
-              d.sizeInBytes)
-          }
-          val decoded = spark.createDataset(descRows)
-            .repartition(math.max(1, math.min(descRows.size,
-              spark.sparkContext.defaultParallelism)))
-            .mapPartitions { it =>
-              if (it.isEmpty) Iterator.empty
-              else {
-                val c = new org.apache.hadoop.conf.Configuration(false)
-                c.readFields(new java.io.DataInputStream(
-                  new java.io.ByteArrayInputStream(confBytes)))
-                var cachedFs: FileSystem = null
-                it.flatMap { case (p, st, dvp, off, size) =>
-                  val dvPath = new Path(dvp)
-                  if (cachedFs == null) cachedFs = dvPath.getFileSystem(c)
-                  readDv(cachedFs, DvDescriptor(st, dvp, off, size, 0L)).iterator
-                    .map(pos => (p, pos))
-                }
+        val descRows = dvFiles.map { case (u, d) =>
+          (LiveScan.canonicalPath(u), d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes)
+        }
+        val decoded = spark.createDataset(descRows)
+          .repartition(math.max(1, math.min(descRows.size,
+            spark.sparkContext.defaultParallelism)))
+          .mapPartitions { it =>
+            if (it.isEmpty) Iterator.empty
+            else {
+              val c = new org.apache.hadoop.conf.Configuration(false)
+              c.readFields(new java.io.DataInputStream(
+                new java.io.ByteArrayInputStream(confBytes)))
+              var cachedFs: FileSystem = null
+              it.flatMap { case (p, st, dvp, off, size) =>
+                val dvPath = new Path(dvp)
+                if (cachedFs == null) cachedFs = dvPath.getFileSystem(c)
+                readDv(cachedFs, DvDescriptor(st, dvp, off, size, 0L)).iterator
+                  .map(pos => (p, pos))
               }
             }
-            .toDF("_dpath", "_dpos")
-          base.join(decoded,
-            base("_gpath") === col("_dpath") && base("_gpos") === col("_dpos"), "left_anti")
-        }
+          }
+          .toDF("_dpath", "_dpos")
+        Some(LiveScan.PositionDeletes(decoded, seqScoped = false, broadcast = false))
       }
-    live.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    LiveScan(spark, schema, scanFiles, st.partitionColumns, pos = pos)
   }
 
   /** Delta version history (ascending) — for time-travel tests. */

@@ -1095,6 +1095,13 @@ object IcebergExport {
     meta
   }
 
+  /** The export's filesystem and its ONE metadata resolution for a read. */
+  private def openMeta(spark: SparkSession, exportDir: String): (FileSystem, JsonNode) = {
+    val p = new Path(exportDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, loadMeta(fs, p))
+  }
+
   def readFiles(
       fs: FileSystem, exportDir: Path, atSnapshotId: Option[Long] = None
   ): (Seq[ManifestDataFile], Seq[ManifestDeleteFile]) =
@@ -1182,16 +1189,22 @@ object IcebergExport {
   def readSchema(fs: FileSystem, exportDir: Path, atSnapshotId: Option[Long] = None): StructType =
     readSchemaFrom(loadMeta(fs, exportDir), atSnapshotId)
 
-  private def readSchemaFrom(meta: JsonNode, atSnapshotId: Option[Long]): StructType = {
+  /** The snapshot's own schema node (the current one for writers that
+    * omit per-snapshot ids).
+    */
+  private def schemaNodeFrom(meta: JsonNode, atSnapshotId: Option[Long]): JsonNode = {
     val schemaId = atSnapshotId.flatMap { sid =>
       meta.get("snapshots").elements().asScala
         .find(_.get("snapshot-id").asLong() == sid)
         .flatMap(sn => Option(sn.get("schema-id")).map(_.asInt()))
     }.getOrElse(meta.get("current-schema-id").asInt())
-    val schemaNode = meta.get("schemas").elements().asScala
+    meta.get("schemas").elements().asScala
       .find(_.get("schema-id").asInt() == schemaId)
       .getOrElse(sys.error(s"schema-id $schemaId not in schemas"))
-    StructType(schemaNode.get("fields").elements().asScala.map { f =>
+  }
+
+  private def readSchemaFrom(meta: JsonNode, atSnapshotId: Option[Long]): StructType =
+    StructType(schemaNodeFrom(meta, atSnapshotId).get("fields").elements().asScala.map { f =>
       val name = f.get("name").asText()
       val typeNode = f.get("type")
       require(typeNode.isTextual,
@@ -1200,7 +1213,6 @@ object IcebergExport {
       StructField(name, sparkType(typeNode.asText()),
         nullable = !Option(f.get("required")).exists(_.asBoolean(false)))
     }.toSeq)
-  }
 
   /** Consume an Iceberg v2 table (ours or a FOREIGN engine's filesystem
     * table) end-to-end from its metadata alone: version-hint →
@@ -1212,13 +1224,11 @@ object IcebergExport {
     */
   def readTable(spark: SparkSession, exportDir: String,
       atSnapshotId: Option[Long] = None): DataFrame = {
-    val p = new Path(exportDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one hint resolution for the WHOLE read: schema, file listing and
     // equality-id resolution all come from the same metadata version, so
     // a concurrent per-commit exporter (or its pruning) cannot hand this
     // reader a schema from vN and files from vN+1
-    val meta = loadMeta(fs, p)
+    val (fs, meta) = openMeta(spark, exportDir)
     readLiveRowsFrom(spark, fs, meta, readSchemaFrom(meta, atSnapshotId), atSnapshotId)
   }
 
@@ -1253,9 +1263,7 @@ object IcebergExport {
   def readTableRange(spark: SparkSession, exportDir: String,
       column: String, lo: Double, hi: Double,
       atSnapshotId: Option[Long] = None): DataFrame = {
-    val p = new Path(exportDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = loadMeta(fs, p)
+    val (fs, meta) = openMeta(spark, exportDir)
     val schema = readSchemaFrom(meta, atSnapshotId)
     val field = schema.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(s"readTableRange column '$column' not in the exported schema"))
@@ -1263,18 +1271,9 @@ object IcebergExport {
       s"readTableRange needs a numeric column, '$column' is ${field.dataType}")
     val iceT = icebergType(field.dataType)
     // resolve the column to its durable field id via the SNAPSHOT's schema
-    val fieldId = {
-      val schemaId = atSnapshotId.flatMap { sid =>
-        meta.get("snapshots").elements().asScala
-          .find(_.get("snapshot-id").asLong() == sid)
-          .flatMap(sn => Option(sn.get("schema-id")).map(_.asInt()))
-      }.getOrElse(meta.get("current-schema-id").asInt())
-      meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() == schemaId)
-        .flatMap(_.get("fields").elements().asScala
-          .find(_.get("name").asText() == field.name).map(_.get("id").asInt()))
-        .getOrElse(sys.error(s"field '${field.name}' not in the snapshot's schema"))
-    }
+    val fieldId = schemaNodeFrom(meta, atSnapshotId).get("fields").elements().asScala
+      .find(_.get("name").asText() == field.name).map(_.get("id").asInt())
+      .getOrElse(sys.error(s"field '${field.name}' not in the snapshot's schema"))
     def keep(f: ManifestDataFile): Boolean = {
       val mn = f.lower.get(fieldId).flatMap(decodeBound(iceT, _))
       val mx = f.upper.get(fieldId).flatMap(decodeBound(iceT, _))
@@ -1336,27 +1335,10 @@ object IcebergExport {
     */
   def readTableForKey(spark: SparkSession, exportDir: String, key: Any,
       atSnapshotId: Option[Long] = None): DataFrame = {
-    val p = new Path(exportDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = loadMeta(fs, p)
+    val (fs, meta) = openMeta(spark, exportDir)
     val schema = readSchemaFrom(meta, atSnapshotId)
-    bucketSpecFrom(meta) match {
-      case None =>
-        throw new IllegalArgumentException(
-          s"export at $exportDir publishes no bucket partition spec; use readTable + a filter")
-      case Some((pname, srcName, n)) =>
-        val field = schema.fields.find(_.name == srcName).getOrElse(
-          sys.error(s"bucket source column '$srcName' not in the snapshot schema"))
-        val b = bucketOfKey(field.dataType, key, n)
-        val keep: ManifestDataFile => Boolean = f =>
-          f.partition.get(pname) match {
-            case None          => true  // unpartitioned entry: no claim, must scan
-            case Some(None)    => false // null-key partition: key = <v> can't match
-            case Some(Some(v)) => v == b
-          }
-        readLiveRowsFrom(spark, fs, meta, schema, atSnapshotId, keep)
-          .where(col(srcName) === lit(key))
-    }
+    val (srcName, keep) = keyPruning(exportDir, meta, schema, key)
+    readLiveRowsFrom(spark, fs, meta, schema, atSnapshotId, keep).where(col(srcName) === lit(key))
   }
 
   /** The data files a bucket-pruned point lookup would plan — exposed so
@@ -1365,20 +1347,23 @@ object IcebergExport {
     */
   def plannedDataFilesForKey(spark: SparkSession, exportDir: String, key: Any)
       : (Seq[ManifestDataFile], Seq[ManifestDataFile]) = {
-    val p = new Path(exportDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = loadMeta(fs, p)
-    val schema = readSchemaFrom(meta, None)
-    val (pname, srcName, n) = bucketSpecFrom(meta).getOrElse(
-      throw new IllegalArgumentException("no bucket partition spec published"))
-    val field = schema.fields.find(_.name == srcName).get
-    val b = bucketOfKey(field.dataType, key, n)
+    val (fs, meta) = openMeta(spark, exportDir)
+    val (_, keep) = keyPruning(exportDir, meta, readSchemaFrom(meta, None), key)
     val (all, _) = readFilesFrom(fs, meta, None)
-    (all.filter(f => f.partition.get(pname) match {
-      case None          => true
-      case Some(None)    => false
-      case Some(Some(v)) => v == b
-    }), all)
+    (all.filter(keep), all)
+  }
+
+  /** (bucket source column, file filter) of a point lookup on `key`,
+    * from the default spec's `bucket[n]` field.
+    */
+  private def keyPruning(exportDir: String, meta: JsonNode, schema: StructType, key: Any)
+      : (String, ManifestDataFile => Boolean) = {
+    val (pname, srcName, n) = bucketSpecFrom(meta).getOrElse(throw new IllegalArgumentException(
+      s"export at $exportDir publishes no bucket partition spec; use readTable + a filter"))
+    val field = schema.fields.find(_.name == srcName).getOrElse(
+      sys.error(s"bucket source column '$srcName' not in the snapshot schema"))
+    val b = bucketOfKey(field.dataType, key, n)
+    (srcName, f => LiveScan.bucketMatches(f.partition.get(pname), b))
   }
 
   /** Read the LIVE ROWS of an exported snapshot exactly as an Iceberg v2
@@ -1400,9 +1385,8 @@ object IcebergExport {
   def readLiveRows(
       spark: SparkSession, exportDir: String, readSchema: StructType,
       atSnapshotId: Option[Long] = None): DataFrame = {
-    val p = new Path(exportDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readLiveRowsFrom(spark, fs, loadMeta(fs, p), readSchema, atSnapshotId)
+    val (fs, meta) = openMeta(spark, exportDir)
+    readLiveRowsFrom(spark, fs, meta, readSchema, atSnapshotId)
   }
 
   private def readLiveRowsFrom(spark: SparkSession, fs: FileSystem, meta: JsonNode,
@@ -1410,149 +1394,41 @@ object IcebergExport {
       keepFile: ManifestDataFile => Boolean = _ => true): DataFrame = {
     val (allData, deletes) = readFilesFrom(fs, meta, atSnapshotId)
     require(allData.nonEmpty, "no live data files in the export")
-    val data = allData.filter(keepFile)
-    if (data.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
-    val posDels = deletes.filter(_.content == 1)
-    val eqDels = deletes.filterNot(_.content == 1)
-    // ONE scan per file FORMAT (at most two), every sequence together: the
-    // per-row sequence number is attached via a broadcast join against the
-    // manifest's own (path → seq) map — metadata-sized, the same order as
-    // the file listing Spark broadcasts to schedule the scan. The previous
-    // shape planned one codegen'd scan node per (seq, format) group — fine
-    // at a gate's 3 commits, pathological at stream cadence on a
-    // deferred-compaction table (one scan node per commit; the exact
-    // per-commit scan-union the Delta leg's readTable already collapsed).
-    // Both join sides normalize with DeltaExport's proven twin pair
-    // (canonicalPathCol / canonicalPath): _metadata.file_path is URI
-    // percent-encoded while manifest path strings are driver-rendered, so
-    // a shared regex alone silently empties the join on encoded characters
-    // or URI authorities.
-    val needSeq = deletes.nonEmpty
-    // Sequence-attach joins fail LOUDLY on a miss: the join is on
-    // canonicalized paths, and any future normalization divergence (say a
-    // literal '%' in the table location) would otherwise silently DROP
-    // data rows (inner join) or silently ignore delete files — a
-    // correctness hole with no symptom. A left join + executor-side
-    // raise_error on a null sequence turns that class of bug into a named
-    // failure at read time.
-    def requireSeq(seqCol: String, pathCol: String)(df: DataFrame): DataFrame =
-      df.withColumn(seqCol,
-        when(col(seqCol).isNull, raise_error(concat(
-          lit(s"IcebergExportSeqAttachMiss: file "), col(pathCol),
-          lit(" has no manifest sequence — path normalization diverged"))).cast("bigint"))
-          .otherwise(col(seqCol)))
-    // the manifest's mandatory file_size_in_bytes feeds the scan directly
-    // — no per-file listing round (an external reader plans the same way)
-    def manifestScan(fmt: String, schema: StructType,
-        paths: Seq[String], sizes: Seq[Long]): DataFrame =
-      if (sizes.forall(_ > 0))
-        org.apache.spark.sql.GraftManifestRead.read(spark, fmt, schema,
-          paths.zip(sizes).map { case (p, s) => (new Path(p), s) })
-      else {
-        val reader = spark.read.schema(schema)
-        if (fmt == "orc") reader.orc(paths: _*) else reader.parquet(paths: _*)
-      }
-    val dataDf = data.groupBy(_.fileFormat).map { case (fmt, fsq) =>
-      val df = fmt.toUpperCase match {
-        case "ORC" =>
-          require(posDels.isEmpty,
-            "position deletes require parquet data files (_metadata.row_index); " +
-              s"this snapshot has ORC data files and ${posDels.size} position-delete file(s)")
-          manifestScan("orc", readSchema, fsq.map(_.path), fsq.map(_.sizeBytes))
-        case _ => manifestScan("parquet", readSchema, fsq.map(_.path), fsq.map(_.sizeBytes))
-      }
-      if (!needSeq) df
-      else {
-        import spark.implicits._
-        val seqDf = broadcast(
-          fsq.map(f => (DeltaExport.canonicalPath(f.path), f.seq))
-            .toDF("_spath", "_gseq"))
-        val tagged = requireSeq("_gseq", "_gpath")(df
-          .withColumn("_gpath", DeltaExport.canonicalPathCol(col("_metadata.file_path")))
-          .join(seqDf, col("_gpath") === col("_spath"), "left")
-          .drop("_spath"))
-        if (posDels.isEmpty) tagged.drop("_gpath")
-        else tagged.withColumn("_gpos", col("_metadata.row_index"))
-      }
-    }.reduce(_ unionByName _)
-    // Each delete side is change-set-sized BY DESIGN (accumulated deletes
-    // are bounded by compaction cadence), so both joins broadcast
-    // EXPLICITLY — size estimation on freshly-listed parquet can miss the
-    // threshold, and a shuffle join here would reshuffle the whole data
-    // scan.
-    var out = dataDf
-    if (eqDels.nonEmpty) {
+    val data = allData.filter(keepFile).map(f => ScanFile(f.path, f.sizeBytes, f.seq,
+      if (f.fileFormat.equalsIgnoreCase("ORC")) "orc" else "parquet"))
+    if (data.isEmpty) return LiveScan(spark, readSchema, data) // pruned to nothing: no delete IO
+    val (posDels, eqDels) = deletes.partition(_.content == 1)
+    val eq = if (eqDels.isEmpty) None else {
       val idToName = schemaIdToNameFrom(meta)
       val eqNames = eqDels.flatMap(_.equalityFieldIds).distinct.map(id =>
         idToName.getOrElse(id, sys.error(s"equality field id $id not in any published schema")))
       require(eqNames.size == 1,
         s"this reader supports single-column equality deletes, got: ${eqNames.mkString(", ")}")
       val keyCol = eqNames.head
-      // same one-scan collapse as the data side: delete manifests grow one
-      // per commit, so per-seq scan groups would also accrete scan nodes
-      val delDf = {
-        import spark.implicits._
-        val dseqDf = broadcast(
-          eqDels.map(d => (DeltaExport.canonicalPath(d.path), d.seq)).toDF("_edpath", "_dseq"))
-        // delete files hold exactly the key column at the table's type;
-        // reading with the explicit schema (manifest-known sizes) skips
-        // both schema-inference footer reads and the file listing. A key
-        // dropped from the current schema (time travel) falls back to
-        // the inferring reader. The fast path first verifies every delete
-        // footer actually CARRIES the key field (parallel, O(delete
-        // files) metadata IO): an explicit-schema read of a file missing
-        // the column (foreign/renamed-schema writer) yields all-NULL keys
-        // instead of an AnalysisException, and the downstream NULL-safe
-        // key join would then tombstone every NULL-key data row — the
-        // inferring reader fails loudly on that file instead.
-        val conf = spark.sparkContext.hadoopConfiguration
-        def footersCarryKey: Boolean =
-          SnapshotTable.parallelFooterIo(eqDels)(d =>
-            FileStats.parquetHasField(conf, new Path(d.path), keyCol)).forall(identity)
-        val eqScan = readSchema.fields.find(_.name.equalsIgnoreCase(keyCol)) match {
-          case Some(kf) if eqDels.forall(_.sizeBytes > 0) && footersCarryKey =>
-            org.apache.spark.sql.GraftManifestRead.read(spark, "parquet",
-              StructType(Seq(kf)), eqDels.map(d => (new Path(d.path), d.sizeBytes)))
-          case _ => spark.read.parquet(eqDels.map(_.path): _*)
-        }
-        requireSeq("_dseq", "_edfp")(eqScan
-          .select(col(keyCol),
-            DeltaExport.canonicalPathCol(col("_metadata.file_path")).as("_edfp"))
-          .join(dseqDf, col("_edfp") === col("_edpath"), "left"))
-          .drop("_edfp", "_edpath")
-      }
-      // only the NEWEST delete of a key matters: if max(_dseq) <= the
-      // row's file sequence, every delete of that key predates the row
-      val maxDel = delDf.groupBy(col(keyCol).as("_dkey")).agg(max(col("_dseq")).as("_dseq"))
-      out = out.join(broadcast(maxDel), col(keyCol) <=> col("_dkey"), "left")
-        .where(col("_dseq").isNull || col("_dseq") <= col("_gseq"))
-        .drop("_dkey", "_dseq")
+      // delete files hold exactly the key column at the table's type, so
+      // they read under the pinned key schema — unless the key was
+      // dropped from this schema (time travel), or a delete footer does
+      // not CARRY the key field (foreign/renamed-schema writer): a pinned
+      // read of such a file yields all-NULL keys, and the NULL-safe key
+      // join would then tombstone every NULL-key data row, while the
+      // inferring reader fails loudly on that file instead. The footer
+      // check is parallel, O(delete files) metadata IO.
+      val conf = spark.sparkContext.hadoopConfiguration
+      def footersCarryKey: Boolean =
+        SnapshotTable.parallelFooterIo(eqDels)(d =>
+          FileStats.parquetHasField(conf, new Path(d.path), keyCol)).forall(identity)
+      Some(LiveScan.EqualityDeletes(keyCol, eqDels.map(d => ScanFile(d.path, d.sizeBytes, d.seq)),
+        readSchema.fields.find(_.name.equalsIgnoreCase(keyCol)).filter(_ => footersCarryKey)))
     }
-    if (posDels.nonEmpty) {
-      val pd = {
-        import spark.implicits._
-        val pseqDf = broadcast(
-          posDels.map(d => (DeltaExport.canonicalPath(d.path), d.seq)).toDF("_pdpath", "_pseq"))
-        requireSeq("_pseq", "_pdfp")(spark.read.parquet(posDels.map(_.path): _*)
-          .select(DeltaExport.canonicalPathCol(col("file_path")).as("_ppath"),
-            col("pos").cast("long").as("_ppos"),
-            DeltaExport.canonicalPathCol(col("_metadata.file_path")).as("_pdfp"))
-          .join(pseqDf, col("_pdfp") === col("_pdpath"), "left"))
-          .drop("_pdfp", "_pdpath")
-      }
-      // position deletes apply to files at-or-below their sequence (spec:
-      // a commit may position-delete rows from files it just added), so a
-      // row survives only when every delete of its (path, pos) is from an
-      // OLDER sequence than its file's — i.e. max(_pseq) < _gseq
-      val maxPos = pd.groupBy(col("_ppath"), col("_ppos")).agg(max(col("_pseq")).as("_pseq"))
-      out = out.join(broadcast(maxPos),
-          out("_gpath") === col("_ppath") && out("_gpos") === col("_ppos"), "left")
-        .where(col("_pseq").isNull || col("_pseq") < col("_gseq"))
-        .drop("_ppath", "_ppos", "_pseq")
-    }
-    out.drop("_gseq", "_gpath", "_gpos")
+    // position deletes are rows (file_path, pos) at their delete file's
+    // sequence, and apply to data files AT OR BELOW it (spec: a commit
+    // may position-delete rows from files it just added)
+    val pos = if (posDels.isEmpty) None else Some(LiveScan.PositionDeletes(
+      LiveScan.scan(spark, None, posDels.map(d => ScanFile(d.path, d.sizeBytes, d.seq)), attach = true)
+        .select(LiveScan.canonicalPathCol(col("file_path")).as("_dpath"),
+          col("pos").cast("long").as("_dpos"), col("_gseq").as("_dseq")),
+      seqScoped = true))
+    LiveScan(spark, readSchema, data, eq = eq, pos = pos)
   }
 
   /** Field value, or null when the record's WRITER schema (a legacy

@@ -3,6 +3,7 @@ package graft.tables
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -340,89 +341,33 @@ class SnapshotTable(val spark: SparkSession, val location: String,
   }
 
   /** Read an explicit file subset with the snapshot's schema-on-read,
-    * APPLYING the snapshot's equality deletes ([[DeleteFile]]): a data
-    * row dies when a delete file of its bucket carries its merge key at a
-    * HIGHER sequence than the row's data file. Data files are grouped by
-    * sequence so each group reads in one scan with its sequence as a
-    * literal (a handful of groups — sequences proliferate only on
-    * merge-on-read buckets until compaction absorbs them); the deletes
-    * join is a left-anti on the key with the sequence inequality as a
-    * residual condition. Snapshots without deletes (every copy-on-write
-    * table) skip all of this and read exactly as before.
+    * APPLYING the snapshot's equality deletes ([[DeleteFile]]) through
+    * [[LiveScan]]: a data row dies when a delete file of its bucket
+    * carries its merge key at a HIGHER sequence than the row's data file.
+    * Only deletes that can match are handed over: those above the oldest
+    * file's sequence, and of the buckets being read (keys hash to exactly
+    * one bucket) — unless an adopted (bucket −1) file is read, whose rows
+    * can be of ANY bucket. Snapshots without deletes (every copy-on-write
+    * table) read as the plain manifest scan.
     */
   private def readFiles(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    val minSeq = files.map(_.seq).min
-    val bucketsPresent = files.map(_.bucket).toSet
-    // An adopted (bucket −1) file can hold rows of ANY bucket, so every
-    // delete is in scope for it; otherwise only deletes of the buckets
-    // actually being read can match (keys hash to exactly one bucket).
-    val relevant =
-      if (bucketsPresent.exists(_ < 0)) snap.deletes.filter(_.seq > minSeq)
-      else snap.deletes.filter(d => d.seq > minSeq && bucketsPresent.contains(d.bucket))
-    if (relevant.isEmpty) readFilesRaw(snap, files)
-    else {
+    val minSeq = files.map(_.seq).minOption.getOrElse(Long.MaxValue)
+    val buckets = files.map(_.bucket).toSet
+    val anyBucket = buckets.exists(_ < 0)
+    val relevant = snap.deletes.filter(d => d.seq > minSeq && (anyBucket || buckets.contains(d.bucket)))
+    def qualified(rel: String) = fs.makeQualified(new Path(dataDir, rel)).toString
+    val eq = if (relevant.isEmpty) None else {
       val key = keyColForBucketing(snap)
       val keyField = snap.schema.fields.find(_.name.equalsIgnoreCase(key)).getOrElse(
         throw new IllegalStateException(s"merge key column '$key' missing from table schema"))
-      val data = files.groupBy(_.seq).toSeq.map { case (s, fsOfSeq) =>
-        readFilesRaw(snap, fsOfSeq).withColumn("_gseq", lit(s))
-      }.reduce(_ unionByName _)
-      val delSchema = StructType(Seq(StructField(keyField.name, keyField.dataType, nullable = true)))
-      val dels = relevant.groupBy(_.seq).toSeq.map { case (s, ds) =>
-        // delete files are always parquet with manifest-recorded lengths
-        // — same listing-free scan as the data side
-        // strictly > 0: a parquet file is never 0 bytes, and a corrupt
-        // manifest entry with bytes=0 would make the manifest-fed scan
-        // plan an EMPTY split over a real file (silently unapplied
-        // deletes) — the listing reader is the safe fallback
-        (if (ds.forall(_.bytes > 0))
-           org.apache.spark.sql.GraftManifestRead.read(spark, "parquet", delSchema,
-             ds.map(d => (fs.makeQualified(new Path(dataDir, d.path)), d.bytes)))
-         else spark.read.schema(delSchema)
-           .parquet(ds.map(d => new Path(dataDir, d.path).toString): _*))
-          .select(col(keyField.name).as("_dkey"))
-          .withColumn("_dseq", lit(s))
-      }.reduce(_ unionByName _)
-      // NULL-safe key equality matches the merge's groupBy(key) semantics
-      // (NULL is a key); rows of files at/after the delete's sequence
-      // already reflect the change and must survive.
-      data.join(dels, col(key) <=> col("_dkey") && col("_dseq") > col("_gseq"), "left_anti")
-        .drop("_gseq")
+      // delete files are always parquet, holding just the key
+      Some(LiveScan.EqualityDeletes(keyField.name,
+        relevant.map(d => ScanFile(qualified(d.path), d.bytes, d.seq)),
+        Some(keyField.copy(nullable = true))))
     }
-  }
-
-  /** Read an explicit file subset with the snapshot's schema-on-read
-    * (no delete application — [[readFiles]] layers that on top).
-    */
-  private def readFilesRaw(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else {
-      val format = SnapshotTable.resolveFormat(snap.properties)
-      // The manifest already knows every file's true length (recorded
-      // from the write listing), so parquet/orc scans skip Spark's
-      // listing round — no getFileStatus per file, no listing JOB past
-      // 32 paths (guide §6: manifest formats exist so readers never
-      // list). Schema-on-read semantics are unchanged (same relation +
-      // FileFormat); avro or a legacy entry without a length falls back.
-      // strictly > 0 (not >= 0): a 0-length recorded size would plan an
-      // empty scan of a real file and silently drop its rows; parquet/orc
-      // files are never 0 bytes, so 0 means "size unknown/corrupt" → list
-      if ((format == "parquet" || format == "orc") && files.forall(_.bytes > 0))
-        org.apache.spark.sql.GraftManifestRead.read(spark, format, snap.schema,
-          files.map(f => (fs.makeQualified(new Path(dataDir, f.path)), f.bytes)))
-      else {
-        val paths = files.map(f => new Path(dataDir, f.path).toString)
-        // schema-on-read: files written before an ADD COLUMNS fill NULL
-        val reader = spark.read.schema(snap.schema)
-        format match {
-          case "orc"  => reader.orc(paths: _*)
-          case "avro" => reader.format(SnapshotTable.AvroFormatClass).load(paths: _*)
-          case _      => reader.parquet(paths: _*)
-        }
-      }
-    }
+    val format = SnapshotTable.resolveFormat(snap.properties)
+    LiveScan(spark, snap.schema,
+      files.map(f => ScanFile(qualified(f.path), f.bytes, f.seq, format)), eq = eq)
   }
 
   // ----------------------------------------------------------------- writes
@@ -576,7 +521,7 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     *  - per-bucket [[DeleteFile]]s holding the merge keys whose existing
     *    rows are superseded (updated or tombstoned),
     * so write amplification is O(change set), not O(touched buckets).
-    * Readers apply the deletes as a left-anti join ([[readFiles]]);
+    * Readers apply the deletes as a left-anti join ([[LiveScan]]);
     * [[compact]] (or any copy-on-write [[merge]] of the bucket) later
     * rewrites the bucket clean and drops the delete entries.
     *
@@ -1523,37 +1468,27 @@ class SnapshotTable(val spark: SparkSession, val location: String,
         val cand = candAll.filterNot(f => unchangedBuckets(f.bucket))
         if (cand.isEmpty) { SnapshotTable.lastDvExportDriverRows = 0L; reusedDvs }
         else {
-          import org.apache.spark.sql.functions.{broadcast, lit, max => smax, regexp_replace}
-          import spark.implicits._
+          import org.apache.spark.sql.functions.{broadcast, max => smax}
           def qualify(rel: String) = fs.makeQualified(new Path(dataDir, rel)).toString
-          def normStr(u: String) = DeltaExport.canonicalPath(u)
           // delete files under the PINNED single-column key schema (the
           // engine's own delete read above) — an inferred schema could
           // flip or fail across a key-type-widening migration's mixed
-          // files. ONE scan of all delete files with the (bucket, seq)
-          // attached via a broadcast path join — a per-file scan union
-          // planned one codegen'd node per delete file, which dominated
-          // the gate at 64 outstanding delete files and would be
+          // files. ONE scan of all delete files, each row's (bucket, seq)
+          // attached from the file list by [[LiveScan.scan]] — a per-file
+          // scan union planned one codegen'd node per delete file, which
+          // dominated the gate at 64 outstanding delete files and would be
           // pathological on a deferred-OPTIMIZE backlog.
           // only CHANGED buckets' delete files are opened — unchanged
           // buckets were satisfied above from reused descriptors, and a
           // bucket with no candidate files has nothing to position-ize
           val candBuckets = cand.map(_.bucket).toSet
           val delScan = snap.deletes.filter(d => candBuckets(d.bucket))
-          val delSchema = StructType(Seq(
-            StructField(keyField.name, keyField.dataType, nullable = true)))
-          val delMeta = delScan
-            .map(d => (normStr(qualify(d.path)), d.bucket, d.seq))
-            .toDF("_dp", "_db", "_ds0")
-          val delDf = spark.read.schema(delSchema)
-            .parquet(delScan.map(d => qualify(d.path)): _*)
-            .select(col(keyField.name).as("_dk"),
-              DeltaExport.canonicalPathCol(col("_metadata.file_path")).as("_dp"))
-            .join(broadcast(delMeta), Seq("_dp"))
-            .groupBy("_dk", "_db").agg(smax("_ds0").as("_ds"))
-          val metaDf = cand
-            .map(f => (normStr(qualify(f.path)), f.bucket, f.seq, qualify(f.path)))
-            .toDF("_p", "_b", "_fs", "_uri")
+          val delDf = LiveScan.scan(spark, Some(StructType(Seq(keyField.copy(nullable = true)))),
+              delScan.map(d =>
+                ScanFile(qualify(d.path), d.bytes, d.seq, tuple = Seq(Some(d.bucket.toString)))),
+              attach = true, tupleCols = Seq("_db"))
+            .groupBy(col(keyField.name).as("_dk"), col("_db__str").cast("int").as("_db"))
+            .agg(smax("_gseq").as("_ds"))
           // The delete-key side broadcasts only while the manifest's own
           // row counts say it is change-set-sized — a deferred-OPTIMIZE
           // backlog of hundreds of millions of distinct tombstoned keys
@@ -1572,20 +1507,19 @@ class SnapshotTable(val spark: SparkSession, val location: String,
             s"DELTA EXPORT: $totalDelRows outstanding delete rows exceed the broadcast " +
               "bound — position-izing via a shuffle join (compact to clear the backlog)")
           def hintDel(df: DataFrame): DataFrame = if (delSmall) broadcast(df) else df
-          // candidate files under the snapshot schema (readFilesRaw's
-          // schema-on-read stance), plus the parquet metadata columns
-          val hit = spark.read.schema(snap.schema).parquet(cand.map(f => qualify(f.path)): _*)
-            .select(col(keyField.name).as("_k"),
-              DeltaExport.canonicalPathCol(col("_metadata.file_path")).as("_p"),
-              col("_metadata.row_index").as("_pos"))
-            .join(broadcast(metaDf), Seq("_p"))
-            // NULL-SAFE key equality (the merge/delete-read semantics at
-            // [[readFiles]]): NULL is a supported merge key, and === here
+          // candidate files under the snapshot schema, with each row's
+          // position, bucket, sequence and DV-map uri
+          val hit = LiveScan.scan(spark, Some(snap.schema),
+              cand.map(f => ScanFile(qualify(f.path), f.bytes, f.seq,
+                tuple = Seq(Some(f.bucket.toString), Some(qualify(f.path))))),
+              attach = true, rowIndex = true, tupleCols = Seq("_b", "_uri"))
+            // NULL-SAFE key equality (the merge/delete-read semantics of
+            // [[LiveScan]]): NULL is a supported merge key, and === here
             // would silently resurrect NULL-keyed tombstoned rows in every
             // external Delta reader
-            .join(hintDel(delDf),
-              col("_k") <=> col("_dk") && col("_b") === col("_db") && col("_ds") > col("_fs"))
-            .select(col("_uri"), col("_pos"))
+            .join(hintDel(delDf), col(keyField.name) <=> col("_dk") &&
+              col("_b__str").cast("int") === col("_db") && col("_ds") > col("_gseq"))
+            .select(col("_uri__str").as("_uri"), col("_gpos").as("_pos"))
           val dvs = DeltaExport.writeDvsDistributed(spark, hit, priorDvs,
             new Path(out, "deletion_vectors"), snap.version)
           SnapshotTable.lastDvExportDriverRows = dvs.size.toLong
@@ -1830,27 +1764,51 @@ object SnapshotTable {
     * in order. Every action but the last runs on a FRESH thread so it
     * inherits the caller's InheritableThreadLocal Spark properties (job
     * group/description — a shared pool would freeze its first caller's);
-    * the last runs on the calling thread. Every action is joined before
-    * this returns or throws (no abandoned in-flight job); the first
-    * failure in argument order is rethrown with the others suppressed.
+    * the last runs on the calling thread. Each action's jobs carry their
+    * own job tag, and the first failure cancels the other actions' jobs
+    * (tags, not a job group: the caller's group stays set). Every action
+    * is joined before this returns or throws. The first failure in
+    * argument order is rethrown with the others suppressed — skipping
+    * Spark failures of actions a sibling's failure had already cancelled,
+    * so the cause surfaces rather than its cancellation.
     */
   private[graft] def allConcurrently[A](actions: Seq[() => A]): Seq[A] = {
-    def attempt(act: () => A): Either[Throwable, A] = try Right(act()) catch { case e: Throwable => Left(e) }
-    val forked = actions.dropRight(1).map { act =>
-      val r = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
-      val t = new Thread(() => r.set(attempt(act)), "graft-concurrent-action")
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tags = actions.indices.map(i => s"graft-concurrent-${UUID.randomUUID()}-$i")
+    val canceller = new java.util.concurrent.atomic.AtomicInteger(-1)
+    def cancelOthers(): Unit = canceller.get match {
+      case -1 => ()
+      case i  => sc.foreach(c => tags.patch(i, Nil, 1).foreach(c.cancelJobsWithTag))
+    }
+    // Left((error, whether it followed a sibling's cancellation of this action))
+    def attempt(i: Int): Either[(Throwable, Boolean), A] = {
+      sc.foreach(_.addJobTag(tags(i)))
+      try Right(actions(i)())
+      catch {
+        case e: Throwable =>
+          if (canceller.compareAndSet(-1, i)) cancelOthers()
+          Left((e, canceller.get != i &&
+            Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[SparkException])))
+      } finally sc.foreach(_.removeJobTag(tags(i)))
+    }
+    val forked = actions.indices.dropRight(1).map { i =>
+      val r = new java.util.concurrent.atomic.AtomicReference[Either[(Throwable, Boolean), A]]()
+      val t = new Thread(() => r.set(attempt(i)), "graft-concurrent-action")
       t.setDaemon(true)
       t.start()
       (t, r)
     }
-    val last = actions.lastOption.map(attempt)
-    forked.foreach(_._1.join())
+    val last = actions.indices.lastOption.map(attempt)
+    // a sibling may submit a job after the cancel went out (a cancel only
+    // reaches active jobs), so it repeats until every action has ended
+    forked.foreach { case (t, _) => while ({ t.join(50); t.isAlive }) cancelOthers() }
     val results = forked.map(_._2.get()) ++ last
     results.collect { case Left(e) => e } match {
-      case first +: rest =>
-        rest.foreach(e => if (e ne first) first.addSuppressed(e))
+      case Seq() => results.collect { case Right(x) => x }
+      case errors =>
+        val first = errors.find(!_._2).getOrElse(errors.head)._1
+        errors.foreach { case (e, _) => if (e ne first) first.addSuppressed(e) }
         throw first
-      case _ => results.collect { case Right(x) => x }
     }
   }
 
@@ -1989,13 +1947,13 @@ object SnapshotTable {
   // Internal helper column names used by the bucketed write (`gbk`), the
   // merge's union+argmax (`_del`/`_pri`), merge-on-read's decision join
   // (`_k`/`_v`/`_d`/`_row`/`_tk`/`_tv`/`_texists`/`_kill`/`_upsert`) and
-  // the delete-applying read (`_gseq`/`_dkey`/`_dseq`). A same-named USER
-  // column would be silently overwritten and lost in every merged row —
-  // reject loudly up front instead (reserved-name collisions are schema
-  // bugs).
+  // the delete-applying read (`_gseq`/`_gpath`/`_gentry`/`_dkey`/`_dseq`). A
+  // same-named USER column would be silently overwritten and lost in every
+  // merged row — reject loudly up front instead (reserved-name collisions
+  // are schema bugs).
   private val ReservedColumns = Set("gbk", "_del", "_pri",
     "_k", "_v", "_d", "_row", "_tk", "_tv", "_texists", "_kill", "_upsert",
-    "_gseq", "_dkey", "_dseq", "_fp", "_tp")
+    "_gseq", "_gpath", "_gentry", "_dkey", "_dseq", "_fp", "_tp")
 
   private[tables] def rejectReservedColumns(schema: org.apache.spark.sql.types.StructType): Unit = {
     val clash = schema.fieldNames.filter(n => ReservedColumns.contains(n.toLowerCase))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 
 import java.net.URI
 
@@ -17,6 +17,21 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.record(p, try super.getFileStatus(p).getLen catch { case _: Throwable => 0L })
     super.open(p, bufferSize)
+  }
+
+  // The local file statuses load owner/permission lazily through
+  // `new File(getPath.toUri)`, which rejects any scheme but `file:` — so
+  // `listFiles` (its LocatedFileStatus reads the permission) failed on
+  // every `counting:` path. Statuses leave here with that info loaded.
+  override def getFileStatus(p: Path): FileStatus = loaded(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(loaded)
+
+  private def loaded(st: FileStatus): FileStatus = {
+    val p = st.getPath
+    st.setPath(new Path("file", null, p.toUri.getPath))
+    st.getPermission
+    st.setPath(p)
+    st
   }
 }
 

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The test suite runs under the production engine configuration, and
-  * `EngineSession` stays the only place a session is built.
+/** The test suite runs under the production engine configuration,
+  * `EngineSession` stays the only place a session is built, and
+  * `LiveScan` the only table reader that scans manifest-known files.
   */
 class EngineSessionSpec extends SparkSpec {
 
@@ -14,14 +15,23 @@ class EngineSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
-  test("only EngineSession.scala builds a session") {
-    val needle = "SparkSession" + ".builder" // split, so this file does not match itself
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_).toAbsolutePath)
-    roots.foreach(r => assert(Files.isDirectory(r), s"$r missing (run from the repo root)"))
-    val hits = roots.flatMap(r => Files.walk(r).iterator().asScala.toSeq)
+  /** Names of the .scala files under `roots` whose source contains `needle`. */
+  private def filesContaining(needle: String, roots: String*): Seq[String] = {
+    val dirs = roots.map(Paths.get(_).toAbsolutePath)
+    dirs.foreach(r => assert(Files.isDirectory(r), s"$r missing (run from the repo root)"))
+    dirs.flatMap(r => Files.walk(r).iterator().asScala.toSeq)
       .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
       .map((p: Path) => p.getFileName.toString)
-    assert(hits == Seq("EngineSession.scala"))
+  }
+
+  test("only EngineSession.scala builds a session") {
+    // needles are split, so this file does not match itself
+    assert(filesContaining("SparkSession" + ".builder", "src/main/scala", "src/test/scala") ==
+      Seq("EngineSession.scala"))
+  }
+
+  test("only LiveScan.scala scans manifest-known files: one live-row scan for every table reader") {
+    assert(filesContaining("GraftManifestRead" + ".read(", "src/main/scala/graft") == Seq("LiveScan.scala"))
   }
 
   test("core count: SPARK_GRAFT_CPUS sizes master and shuffle, else every core") {

@@ -1978,21 +1978,29 @@ class ExtOpsSpec extends SparkSpec {
     assert(kept >= 390, s"false-positive rate too high: kept $kept/400")
   }
 
-  test("Quality.check: a rule failing at execution returns only after every FK job ended") {
+  test("Quality.check: a failing rule cancels the FK job; the caller's job group stays") {
     import graft.ext.Quality._
+    QualityFkProbe.finished.set(0)
+    // one partition: the FK job's parent side takes 4 x 500 ms in one task
     val slow = udf { (id: Long) =>
-      QualityFkProbe.started.incrementAndGet(); Thread.sleep(200)
-      QualityFkProbe.finished.incrementAndGet(); id
+      Thread.sleep(500); QualityFkProbe.finished.incrementAndGet(); id
     }.asNondeterministic()
-    val parent = spark.range(0, 4, 1, 4).select(slow(col("id")).as("pk"))
-    intercept[Exception] {
-      check(Seq(1L, 2L, 3L).toDF("k"),
-        Seq(Predicate("boom", raise_error(lit("boom")).isNull), ForeignKey("k", parent, "pk")))
-    }
-    val (started, finished) = (QualityFkProbe.started.get(), QualityFkProbe.finished.get())
-    assert(finished >= 4 && started == finished, s"FK job still running: $started started, $finished finished")
+    val parent = spark.range(0, 4, 1, 1).select(slow(col("id")).as("pk"))
+    val sc = spark.sparkContext
+    sc.setJobGroup("quality-caller", "caller's group")
+    try {
+      val t0 = System.nanoTime()
+      intercept[Exception] {
+        check(Seq(1L, 2L, 3L).toDF("k"),
+          Seq(Predicate("boom", raise_error(lit("boom")).isNull), ForeignKey("k", parent, "pk")))
+      }
+      val ms = (System.nanoTime() - t0) / 1000000
+      val rowsDone = QualityFkProbe.finished.get()
+      assert(rowsDone < 4, s"returned after the FK job's whole parent scan ($rowsDone rows, $ms ms)")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "quality-caller")
+    } finally sc.clearJobGroup()
   }
 }
 
 /** Task-side counters for the FK-join probe above (same JVM under local[N]). */
-object QualityFkProbe { val started, finished = new java.util.concurrent.atomic.AtomicInteger() }
+object QualityFkProbe { val finished = new java.util.concurrent.atomic.AtomicInteger() }

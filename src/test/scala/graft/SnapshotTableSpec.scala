@@ -547,6 +547,25 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().where(col("payload") === "live").count() == 1)
   }
 
+  test("removeOrphanFiles under a wrapped local scheme removes the orphan and keeps every live file") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.counting.impl", classOf[CountingAbstractFileSystem].getName)
+    val base = tmpDir("snap-orphans-counting")
+    val t = SnapshotTable(spark, s"counting://$base/table")
+    t.createOrReplace((1 to 40).map(i => (s"k$i", 1L, s"v$i"))
+      .toDF("arcane_merge_key", "versionnumber", "payload"), "arcane_merge_key", numBuckets = 4)
+    val orphan = new java.io.File(s"$base/table/data/orphan-dir/part-orphan.parquet")
+    orphan.getParentFile.mkdirs()
+    java.nio.file.Files.write(orphan.toPath, Array[Byte](1, 2, 3))
+    val live = t.currentSnapshot.files.map(_.path)
+    val removed = t.removeOrphanFiles(olderThanMs = System.currentTimeMillis() + 3600_000)
+    assert(removed == Seq("orphan-dir/part-orphan.parquet"))
+    assert(!orphan.exists())
+    live.foreach(p => assert(new java.io.File(s"$base/table/data/$p").exists(), s"live file $p removed"))
+    assert(t.read().count() == 40)
+  }
+
   test("write-time sort order yields sorted files; bloom option accepted") {
     val t = SnapshotTable(spark, tmpDir("snap-layout"))
     val df = (1 to 100).reverse.map(i => (s"k$i", i.toLong, s"v$i"))
