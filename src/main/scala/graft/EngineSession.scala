@@ -1,6 +1,12 @@
 package graft
 
+import graft.tables.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem}
 import org.apache.spark.sql.SparkSession
+
+import java.net.URI
+import java.util.concurrent.atomic.AtomicBoolean
 
 /** The one engine session builder. The production entry point
   * (`graft.app.Main`), the `Bench`/`Verify` mains, the `Prof` dev tool and
@@ -42,7 +48,14 @@ object EngineSession {
     // gbk= partitions could leave an orphan part- file inside the live
     // commit dir. Deterministic bucketing (repartition by gbk of
     // deterministic input) plus no speculation closes that window.
-    "spark.speculation" -> "false")
+    "spark.speculation" -> "false",
+    // `file:` without forked processes (`tables.ForkFreeLocalFs`): with no
+    // libhadoop, the stock local filesystem forks `chmod` after every
+    // create and mkdir and `readlink` on every FileContext rename, ~120
+    // processes per copy-on-write batch. Both bindings, because the
+    // streaming checkpoint and `AtomicRename` publish through FileContext.
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
   /** The core count `SPARK_GRAFT_CPUS` names, if it is set. */
   def envCpus: Option[Int] = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
@@ -76,6 +89,31 @@ object EngineSession {
     val spark = builder.getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",
       shufflePartitions(cpus, spark.sparkContext.defaultParallelism).toLong)
+    checkLocalBinding(spark.sparkContext.hadoopConfiguration)
     spark
+  }
+
+  /** The (FileSystem, AbstractFileSystem) classes `file:` resolves to
+    * under `conf`.
+    */
+  private[graft] def localFsClasses(conf: Configuration): (Class[_], Class[_]) = {
+    val local = URI.create("file:///")
+    (FileSystem.get(local, conf).getClass, AbstractFileSystem.get(local, conf).getClass)
+  }
+
+  private val bindingWarned = new AtomicBoolean(false)
+
+  // Hadoop caches a FileSystem by scheme and user, not by conf: one that
+  // something in the JVM obtained before this session was built (or a
+  // session joined rather than built) keeps the stock class for the life
+  // of the JVM. That only costs time, so it is a warning, once.
+  private def checkLocalBinding(conf: Configuration): Unit = {
+    val (fs, afs) = localFsClasses(conf)
+    if ((fs != classOf[ForkFreeLocalFileSystem] || afs != classOf[ForkFreeLocalFs]) &&
+        bindingWarned.compareAndSet(false, true))
+      System.err.println(
+        s"LOCAL FS BINDING: 'file:' resolves to ${fs.getName} and ${afs.getName}, not the " +
+          "fork-free binding (a FileSystem cached before the session was built wins) — every " +
+          "local create, mkdir and rename now forks a process")
   }
 }

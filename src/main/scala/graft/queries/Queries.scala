@@ -50,9 +50,16 @@ object Queries {
     * key makes a regenerated table re-infer, so no staleness window.
     * Results are identical by construction: `schema(inferred)` is
     * byte-for-byte the schema the inferring read would have used.
+    * LRU-bounded: every regenerated table and every new session adds a
+    * key, and a long-lived JVM must not grow with them.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val SchemaCacheEntries = 256
+  private val schemaCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, org.apache.spark.sql.types.StructType]): Boolean =
+        size() > SchemaCacheEntries
+    })
 
   private[graft] def readParquetCached(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -71,7 +78,13 @@ object Queries {
         // missing path etc.: let the inferring reader raise its own error
         case _: java.io.IOException => return spark.read.parquet(path)
       }
-    val schema = schemaCache.computeIfAbsent(sig, _ => spark.read.parquet(path).schema)
+    // inferred outside the map's lock: inference is a Spark job, and a
+    // rare duplicate inference is cheaper than serialising every reader
+    val schema = Option(schemaCache.get(sig)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemaCache.put(sig, inferred)
+      inferred
+    }
     spark.read.schema(schema).parquet(path)
   }
 

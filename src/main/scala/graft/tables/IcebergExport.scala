@@ -892,7 +892,7 @@ object IcebergExport {
     root.put("last-partition-id", lastPartId) // partition field ids start at 1000
     // Declare the table's write-time sort (`write.sort.order`, the
     // reference's CREATE TABLE sortedBy) as an Iceberg sort order:
-    // writeBucketed sorts within partitions by exactly these columns
+    // SnapshotTable.writePartitions sorts within partitions by exactly these columns
     // ascending (Spark's default asc = nulls-first, matching the
     // declared null-order), so external engines can plan merge-on-sorted
     // reads honestly. Order 0 (unsorted) is always present for snapshots

@@ -390,8 +390,8 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     // via extraProps); this is the zero-extra-cost migration path
     val mergedProps = prevProps ++ extraProps + (PropMergeKeyCol -> mergeKeyCol) +
       (PropBucketFn -> extraProps.getOrElse(PropBucketFn, BucketFnIceberg))
-    val written = writeBucketed(df, mergeKeyCol, numBuckets, commitId, targetBuckets = None,
-      props = mergedProps)
+    val written = writePartitions(partitionByBucket(df, mergeKeyCol, numBuckets, None, mergedProps),
+      commitId, props = mergedProps)
     val prevVersion = if (exists) currentSnapshot.version else 0L
     commit(Snapshot(prevVersion + 1, df.schema, numBuckets, written, mergedProps, now()))
   }
@@ -423,8 +423,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     * `staged` must be key-unique (apply [[graft.ops.LatestVersionDedup]]
     * first). Only buckets containing staged keys are rewritten; everything
     * else is carried forward as metadata. The union+argmax formulation below
-    * is one shuffle of (affected target buckets + staged rows) — equivalent
-    * to the anti-join+union MERGE rewrite but with a single exchange.
+    * is equivalent to the anti-join+union MERGE rewrite with a single
+    * exchange: (affected target buckets + staged rows) are partitioned by
+    * bucket once, and each partition's argmax is written as it stands.
     */
   def merge(
       staged: DataFrame,
@@ -465,7 +466,7 @@ class SnapshotTable(val spark: SparkSession, val location: String,
       stagedB.select("gbk").distinct().collect().map(_.getInt(0)).toSet)
     // Adopted (externally written, unbucketed) files are fully ABSORBED by
     // the first merge after adoption: their rows can hash to any bucket,
-    // and writeBucketed drops rows outside the affected set, so every
+    // and the rewrite drops rows outside the affected set, so every
     // bucket an adopted row lands in must join the rewrite. The extra scan
     // is bounded by the adopted batch (one distinct-gbk job over just
     // those files), and afterwards the table is fully bucketed again —
@@ -487,18 +488,22 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     // Latest version wins across {existing row, staged row}; a tombstone
     // only deletes when it IS the latest version (SURVEY.md §7 hard-part 4).
     // Tie (replayed row, equal version): prefer the target row — no-op.
-    val winner = tgt
-      .withColumn("_pri", lit(1))
-      .unionByName(src.withColumn("_pri", lit(0)))
-      .groupBy(col(mergeKeyCol))
+    // The union is partitioned by bucket once; that already clusters every
+    // (bucket, key) group, so the argmax adds no exchange and the write
+    // writes from the same partitions.
+    val (byBucket, layout) = partitionByBucket(
+      tgt.withColumn("_pri", lit(1)).unionByName(src.withColumn("_pri", lit(0))),
+      mergeKeyCol, n, Some(affected), snap.properties)
+    val winner = byBucket
+      .groupBy(col("gbk"), col(mergeKeyCol))
       .agg(max(struct(col(versionCol), col("_pri"), col("_del"),
         struct(unionSchema.fieldNames.map(col).toIndexedSeq: _*).as("row"))).as("w"))
       .where(!col("w._del"))
-      .select(unionSchema.fieldNames.map(f => col(s"w.row.$f").as(f)).toIndexedSeq: _*)
+      .select(col("gbk") +: unionSchema.fieldNames.map(f => col(s"w.row.$f").as(f)).toIndexedSeq: _*)
 
     val commitId = UUID.randomUUID().toString
-    val written = writeBucketed(winner, mergeKeyCol, n, commitId, targetBuckets = Some(affected),
-      props = snap.properties, seq = snap.version + 1)
+    val written = writePartitions((winner, layout), commitId, props = snap.properties,
+      seq = snap.version + 1)
     if (cached) stagedB.unpersist()
     // adopted files are never carried — their rows were just rewritten
     // into their real buckets (carrying them would duplicate every row).
@@ -654,8 +659,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
       // merge-on-read commit at bench scale; at production scale the win
       // is the smaller of the two jobs' wall time.
       val (written, delWritten) = SnapshotTable.inParallel(
-        ph("mor:writeBucketed")(writeBucketed(newRows, mergeKeyCol, n, commitId,
-          targetBuckets = Some(affected), props = snap.properties, seq = newSeq)),
+        ph("mor:writePartitions")(writePartitions(
+          partitionByBucket(newRows, mergeKeyCol, n, Some(affected), snap.properties),
+          commitId, props = snap.properties, seq = newSeq)),
         ph("mor:writeDeletes")(
           writeDeletes(delKeys, mergeKeyCol, n, fn, commitId, newSeq)))
       decided.unpersist()
@@ -788,8 +794,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     if (adopted.isEmpty) return snap
     val df = readFiles(snap, adopted)
     val commitId = UUID.randomUUID().toString
-    val written = writeBucketed(df, keyColForBucketing(snap), snap.numBuckets, commitId,
-      targetBuckets = None, props = snap.properties, seq = snap.version + 1)
+    val written = writePartitions(
+      partitionByBucket(df, keyColForBucketing(snap), snap.numBuckets, None, snap.properties),
+      commitId, props = snap.properties, seq = snap.version + 1)
     commit(snap.copy(version = snap.version + 1,
       files = snap.files.filter(_.bucket >= 0) ++ written, timestampMs = now()))
   }
@@ -813,8 +820,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     val props = snap.properties + (SnapshotTable.PropBucketFn -> SnapshotTable.BucketFnIceberg)
     val df = read() // applies outstanding equality deletes — the rewrite absorbs them
     val commitId = UUID.randomUUID().toString
-    val written = writeBucketed(df, keyColForBucketing(snap), snap.numBuckets, commitId,
-      targetBuckets = None, props = props, seq = snap.version + 1)
+    val written = writePartitions(
+      partitionByBucket(df, keyColForBucketing(snap), snap.numBuckets, None, props),
+      commitId, props = props, seq = snap.version + 1)
     commit(snap.copy(version = snap.version + 1, files = written, properties = props,
       timestampMs = now(), deletes = Seq.empty))
   }
@@ -846,8 +854,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     if (needs.isEmpty) return snap
     val df = read(Some(needs))
     val commitId = UUID.randomUUID().toString
-    val written = writeBucketed(df, keyColForBucketing(snap), snap.numBuckets, commitId, Some(needs),
-      coalesceOne = true, props = snap.properties, seq = snap.version + 1)
+    val written = writePartitions(
+      partitionByBucket(df, keyColForBucketing(snap), snap.numBuckets, Some(needs), snap.properties),
+      commitId, coalesceOne = true, props = snap.properties, seq = snap.version + 1)
     val carried = snap.files.filterNot(f => needs.contains(f.bucket))
     commit(snap.copy(version = snap.version + 1, files = carried ++ written, timestampMs = now(),
       deletes = snap.deletes.filterNot(d => needs.contains(d.bucket))))
@@ -881,8 +890,9 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     // coalesceOne = false: unlike plain compaction, the z rewrite WANTS
     // the maxRowsPerFile split — consecutive z-ranges land in separate
     // files, which is exactly what makes file-level min/max boxes tight
-    val written = writeBucketed(df, keyColForBucketing(snap), snap.numBuckets, commitId,
-      targetBuckets = None, coalesceOne = false, props = props, seq = snap.version + 1)
+    val written = writePartitions(
+      partitionByBucket(df, keyColForBucketing(snap), snap.numBuckets, None, props),
+      commitId, props = props, seq = snap.version + 1)
     // the full rewrite read applied (and thereby absorbed) every delete
     commit(snap.copy(version = snap.version + 1, files = written, properties = props,
       timestampMs = now(), deletes = Seq.empty))
@@ -1603,25 +1613,22 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     full.substring(base.length)
   }
 
-  /** Write df's rows for the given buckets under data/<commitId>/b=<k>/ and
-    * return the new DataFile entries. One shuffle by bucket id; with
-    * `coalesceOne` each bucket lands in exactly one file (compaction), else
-    * Spark's task parallelism decides within the bucket directory.
+  /** Step one of every bucketed write: `df`'s rows of `targetBuckets` (all
+    * buckets when None) with their bucket id `gbk`, hash-partitioned by it
+    * — the write's one exchange — and the order [[writePartitions]] sorts
+    * each partition into. A caller may put any plan that keeps the
+    * partitioning between the two steps ([[merge]] takes its argmax there).
     */
-  private def writeBucketed(
+  private def partitionByBucket(
       df: DataFrame,
       mergeKeyCol: String,
       n: Int,
-      commitId: String,
       targetBuckets: Option[Set[Int]],
-      coalesceOne: Boolean = false,
       // no default: the bucket fn rides in props (PropBucketFn), and a
       // caller silently writing under the wrong hash would corrupt
       // bucket-pruned reads — every caller must pass the table's props
-      props: Map[String, String],
-      seq: Long = 0L
-  ): Seq[DataFile] = {
-    val out = new Path(dataDir, commitId)
+      props: Map[String, String]
+  ): (DataFrame, Seq[Column]) = {
     val withB = df.withColumn("gbk", bucketExpr(mergeKeyCol, n, SnapshotTable.bucketFnOf(props)))
     val filtered = targetBuckets match {
       case Some(bs) => withB.where(col("gbk").isin(bs.toSeq.map(Integer.valueOf): _*))
@@ -1645,17 +1652,33 @@ class SnapshotTable(val spark: SparkSession, val location: String,
     // (set by [[zorder]], persisted in properties so every later rewrite
     // keeps it) takes precedence over the linear sort order: rows sort by
     // the Morton interleave of the layout columns, clustering file and
-    // row-group min/max stats on ALL of them at once.
-    val arranged = props.get(PropZOrderColumns).filter(_.nonEmpty) match {
-      case Some(zc) =>
-        val zcols = zc.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        partitioned.sortWithinPartitions(col("gbk"), ZOrder.zvalue(filtered, zcols))
-      case None => props.get(PropSortOrder) match {
-        case Some(orderCols) if orderCols.nonEmpty =>
-          partitioned.sortWithinPartitions(col("gbk") +: orderCols.split(",").map(c => col(c.trim)): _*)
-        case _ => partitioned
-      }
+    // row-group min/max stats on ALL of them at once. Its normalisation
+    // pass runs over the rows before the exchange.
+    val layout = props.get(PropZOrderColumns).filter(_.nonEmpty) match {
+      case Some(zc) => Seq(ZOrder.zvalue(filtered, zc.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+      case None => props.get(PropSortOrder).filter(_.nonEmpty).toSeq
+        .flatMap(_.split(",").map(c => col(c.trim)))
     }
+    (partitioned, layout)
+  }
+
+  /** Step two: sort each partition of `byBucket` (from [[partitionByBucket]])
+    * into its layout, write it under data/<commitId>/gbk=<k>/ and return
+    * the new DataFile entries with their footer stats. With `coalesceOne`
+    * each bucket lands in exactly one file (compaction), else Spark's task
+    * parallelism decides within the bucket directory.
+    */
+  private def writePartitions(
+      byBucket: (DataFrame, Seq[Column]),
+      commitId: String,
+      coalesceOne: Boolean = false,
+      props: Map[String, String],
+      seq: Long = 0L
+  ): Seq[DataFile] = {
+    val (partitioned, layout) = byBucket
+    val out = new Path(dataDir, commitId)
+    val arranged =
+      if (layout.isEmpty) partitioned else partitioned.sortWithinPartitions(col("gbk") +: layout: _*)
     val format = SnapshotTable.resolveFormat(props)
     val writer = arranged.write.partitionBy("gbk").mode("append")
     val bloomCols = props.get(PropBloomColumns).toSeq
@@ -1694,7 +1717,7 @@ class SnapshotTable(val spark: SparkSession, val location: String,
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     val conf = spark.sparkContext.hadoopConfiguration
     def metaFor(p: Path): (Map[String, (Double, Double)], Long) = format match {
-      case "parquet" => FileStats.parquetMinMaxAndCount(conf, p, statsCols, df.schema)
+      case "parquet" => FileStats.parquetMinMaxAndCount(conf, p, statsCols, partitioned.schema)
       case "orc"     => (Map.empty, FileStats.orcRowCount(conf, p))
       case _         => (Map.empty, -1L)
     }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
+import graft.tables.ForkFreeRawLocalFileSystem
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
 import java.net.URI
 
@@ -10,28 +11,13 @@ import java.net.URI
   * carried data files. Register with
   * `conf.set("fs.counting.impl", classOf[CountingFileSystem].getName)`.
   */
-class CountingFileSystem extends RawLocalFileSystem {
+class CountingFileSystem extends ForkFreeRawLocalFileSystem {
   override def getScheme: String = "counting"
   override def getUri: URI = URI.create("counting:///")
 
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.record(p, try super.getFileStatus(p).getLen catch { case _: Throwable => 0L })
     super.open(p, bufferSize)
-  }
-
-  // The local file statuses load owner/permission lazily through
-  // `new File(getPath.toUri)`, which rejects any scheme but `file:` — so
-  // `listFiles` (its LocatedFileStatus reads the permission) failed on
-  // every `counting:` path. Statuses leave here with that info loaded.
-  override def getFileStatus(p: Path): FileStatus = loaded(super.getFileStatus(p))
-  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(loaded)
-
-  private def loaded(st: FileStatus): FileStatus = {
-    val p = st.getPath
-    st.setPath(new Path("file", null, p.toUri.getPath))
-    st.getPermission
-    st.setPath(p)
-    st
   }
 }
 

@@ -15,6 +15,11 @@ class EngineSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("the test session resolves the fork-free local FileSystem and FileContext bindings") {
+    assert(EngineSession.localFsClasses(spark.sparkContext.hadoopConfiguration) ==
+      ((classOf[graft.tables.ForkFreeLocalFileSystem], classOf[graft.tables.ForkFreeLocalFs])))
+  }
+
   /** Names of the .scala files under `roots` whose source contains `needle`. */
   private def filesContaining(needle: String, roots: String*): Seq[String] = {
     val dirs = roots.map(Paths.get(_).toAbsolutePath)
