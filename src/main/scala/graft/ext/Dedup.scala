@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,23 +64,12 @@ object Dedup {
 
   // -------------------------------------------------------------- MinHash
 
-  /** Mersenne prime 2^31-1: permutation hash modulus. Sentinel signature
-    * value for empty documents. Coefficients come from a fixed-seed PRNG so
-    * signatures are deterministic across runs and engines.
-    */
-  val MinHashPrime = 2147483647L
-
-  private def hashCoefficients(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong, rnd.nextInt(Int.MaxValue).toLong))
-  }
-
   /** Per-document MinHash signatures: (id, signature array<bigint>) via the
     * single-pass [[graft.sql.MinHashSig]] expression — a pure map operation
     * with NO shuffle (the explode→groupBy formulation materialized
     * |docs|×|shingles| rows and updated `numHashes` agg buffers per row;
     * measured ~3× slower). sig_j = min over shingles of (a_j*h+b_j mod p);
-    * empty docs get the `p` sentinel.
+    * p = 2^31-1, and empty docs get the `p` sentinel.
     */
   def minHashSignatures(
       docs: DataFrame,
@@ -877,15 +867,6 @@ object Dedup {
       driverEdgeLimit: Long = 100000L
   ): CcResult = {
     import org.apache.spark.sql.Observation
-    // Dataset.unpersist is a NO-OP on a localCheckpoint'd frame (it only
-    // clears CacheManager entries, not the checkpoint's persisted RDD
-    // blocks) — release the underlying RDD so superseded rounds free
-    // executor storage deterministically instead of waiting for driver GC.
-    def releaseCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
     // Materialize the symmetric edge set ONCE and truncate its lineage:
     // without the checkpoint every round's plan embeds the full upstream
     // pair-generation plan (MinHash pipeline, band joins, …) k times over,
@@ -929,7 +910,7 @@ object Dedup {
       import spark.implicits._
       val labels = parent.keysIterator.map(x => (x, find(x))).toSeq.toDF("id", "comp")
         .select(col("id").cast(keyType).as("id"), col("comp").cast(keyType).as("comp"))
-      releaseCheckpoint(edges)
+      Checkpoints.release(edges)
       return CcResult(labels, 0)
     }
     // Size the per-round shuffles to the graph, not the session default:
@@ -940,7 +921,7 @@ object Dedup {
     // aggregation at `p` partitions; at 100 TB, p scales with |E|.
     val p = math.max(1, math.min(edges.rdd.getNumPartitions, (nEdges / 500000L + 1).toInt))
     val edgesByV = edges.repartition(p, col("v")).localCheckpoint()
-    releaseCheckpoint(edges) // superseded by edgesByV
+    Checkpoints.release(edges) // superseded by edgesByV
     // Round 0 fused into initialization: every node starts at
     // min(self, direct neighbors) — one aggregation instead of a full
     // propagation round. Pair-graphs (components of size 2) are already
@@ -998,14 +979,14 @@ object Dedup {
         candCk
           .join(candCk.select(col("id").as("comp"), col("comp").as("jcomp")), Seq("comp"), "left")
           .select(col("id"), least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp")))
-      releaseCheckpoint(labels)
-      releaseCheckpoint(candCk)
+      Checkpoints.release(labels)
+      Checkpoints.release(candCk)
       labels = next
       converged = sum == prevSum
       prevSum = sum
       it += 1
     }
-    releaseCheckpoint(edgesByV)
+    Checkpoints.release(edgesByV)
     CcResult(labels, it)
   }
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Checkpoints.release
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,15 +23,6 @@ object Graph {
 
   /** Total rank mass: ranks are fractions of 1 scaled by this. */
   val RankScale = 1000000000000L
-
-  /** Dataset.unpersist is a no-op on a localCheckpoint'd frame — release
-    * the checkpoint's RDD blocks directly (cf. Dedup.releaseCheckpoint).
-    */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Fixed-iteration PageRank over an edge list.
     *

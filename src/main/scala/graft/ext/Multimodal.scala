@@ -32,13 +32,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata carried beside every media payload. */
-  val MediaMetaType: StructType = StructType(Seq(
-    StructField("modality", StringType),      // image | audio | video
-    StructField("format", StringType),        // e.g. png, wav, mp4 (stub: "bin")
-    StructField("byte_length", LongType),
-    StructField("content_md5", StringType)))
-
   /** Output schema of the image decoder / feature extractor. */
   val ImageFeatureType: StructType = StructType(Seq(
     StructField("width", IntegerType),

@@ -978,12 +978,7 @@ object TextAnalysis {
           .localCheckpoint()
         // The new checkpoint is materialized (localCheckpoint is eager);
         // the previous round's RDD blocks are dead — release them
-        // (Dataset.unpersist is a no-op on a checkpointed frame, cf.
-        // Graph.release / Dedup.releaseCheckpoint).
-        prev.queryExecution.analyzed.collectLeaves().foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-          case _ => ()
-        }
+        graft.ops.Checkpoints.release(prev)
         r += 1
       }
     }

@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import graft.cdm.CsvCast
-import graft.ops.{FieldSelection, LatestVersionDedup, MergeKey}
+import graft.ops.{Checkpoints, FieldSelection, LatestVersionDedup, MergeKey}
 import graft.sources.SynapseCdmLayout
 import graft.tables.SnapshotTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -205,15 +205,81 @@ object CdcPipeline {
           "re-seed the index at a fresh location to change it")
     }
 
-  /** The affected-bucket fast path hashes the RAW string key columns, while
-    * the write path re-buckets on the TYPED merge key — valid only when the
-    * raw CSV text and the typed value's string form are provably identical.
-    * That holds for StringType keys (guid/string CDM types: the cast is the
+  /** What the staging job of one micro-batch observed on its way through:
+    * the raw row count, the watermark, the key-unique staged row count and
+    * the target buckets the staged keys land in (None when there is no
+    * target yet, or the batch is empty).
+    */
+  private final case class BatchFacts(
+      rows: Long, watermark: String, stagedRows: Long, affected: Option[Set[Int]])
+
+  /** Stage a micro-batch ONCE: one job parses, casts, keys and
+    * latest-version-dedups the raw rows into a locally checkpointed frame,
+    * and the batch facts ride that same job as two observations — the raw
+    * row count and newest chunk below the dedup shuffle, the staged count
+    * and affected buckets above it. Content dedup and the merge then read
+    * the materialised staged rows instead of re-deriving them from the CSV
+    * scan. The caller releases the checkpoint
+    * ([[Checkpoints.release]]) when the batch ends.
+    *
+    * Watermark = the newest PROCESSED CHUNK's resume point, not just the
+    * newest folder name: a folder split across micro-batches by admission
+    * control commits "folder#chunksDone" until its last chunk lands, so a
+    * restart from the table watermark (checkpoint lost or absent) resumes
+    * the partial folder's remaining chunks instead of silently skipping
+    * them — and external readers of the mirrored property see honest
+    * partial progress.
+    *
+    * The affected buckets hash the TYPED merge key with the table's own
+    * bucket function — exactly what the merge's write computes — so the
+    * set is exact for every key type (hashing anything else computes wrong
+    * buckets, and merge's targetBuckets filter silently drops the staged
+    * rows outside them).
+    *
+    * An observation below a shuffle comes back EMPTY when the batch has no
+    * rows (a folder whose chunk holds no data rows): a missing count reads
+    * as 0, and the staged-side observation is only read for a non-empty
+    * batch.
+    */
+  private def stageBatch(raw: DataFrame, typedSchema: StructType, spec: StreamSpec,
+      table: SnapshotTable): (DataFrame, BatchFacts) = {
+    val rawObs = Observation()
+    val stagedObs = Observation()
+    val observedRaw = raw.observe(rawObs, count(lit(1)).as("rows"),
+      max(struct(col("_folder"), col("_chunk_idx"), col("_chunk_last"))).as("newest"))
+    val bucketing = if (table.exists) {
+      val snap = table.currentSnapshot
+      graft.sql.GraftExtensions.ensureRegistered(raw.sparkSession)
+      Some(SnapshotTable.bucketColumn(col(MergeKey.ColumnName), snap.numBuckets,
+        SnapshotTable.bucketFnOf(snap.properties)))
+    } else None
+    val stagedAggs = count(lit(1)).as("rows") +: bucketing.map(collect_set(_).as("buckets")).toSeq
+    val staged = stage(observedRaw, typedSchema, spec)
+      .observe(stagedObs, stagedAggs.head, stagedAggs.tail: _*)
+      .localCheckpoint()
+    val rows = rawObs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+    if (rows == 0) (staged, BatchFacts(0L, "", 0L, None))
+    else {
+      val newest = rawObs.get("newest").asInstanceOf[Row]
+      val wm =
+        if (newest.getBoolean(2)) newest.getString(0)
+        else s"${newest.getString(0)}#${newest.getInt(1) + 1}"
+      val stagedFacts = stagedObs.get
+      (staged, BatchFacts(rows, wm, stagedFacts("rows").asInstanceOf[Long],
+        bucketing.map(_ => stagedFacts("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet)))
+    }
+  }
+
+  /** Whether affected buckets may be hashed from the RAW string key columns
+    * (a caller's pass over the raw batch, before staging), while the write
+    * path re-buckets on the TYPED merge key — valid only when the raw CSV
+    * text and the typed value's string form are provably identical. That
+    * holds for StringType keys (guid/string CDM types: the cast is the
     * identity). It does NOT hold in general for int64 ("0042" → "42"),
     * decimal ("1.5" → "1.500000"), or dateTime keys, where a divergent
-    * bucket set would silently filter staged rows out of the write.
-    * Non-string keys therefore take the safe path (buckets collected from
-    * the typed, staged frame).
+    * bucket set would silently filter staged rows out of the write; such
+    * callers must let merge collect the buckets. The stream itself hashes
+    * the typed key during staging ([[stageBatch]]) and needs no such test.
     */
   private[graft] def rawKeyBucketsStable(typedSchema: StructType, keyColumns: Seq[String]): Boolean =
     keyColumns.forall { k =>
@@ -359,64 +425,26 @@ object CdcPipeline {
       .writeStream
       .trigger(Trigger.ProcessingTime(jitteredIntervalMs(spec)))
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        // The batch body takes several passes over the micro-batch (empty
-        // check, watermark max, merge join) — cache the parsed CSV once so
-        // the chunk files are read and parsed a single time per batch.
-        raw.persist()
+        // One job stages the batch and observes its facts (stageBatch);
+        // content dedup and the merge read the staged checkpoint, whose
+        // blocks are released when the batch ends, committed or not.
+        val t0 = System.nanoTime()
+        val (staged, facts) = stageBatch(raw, typedSchema, spec, table)
         try {
-          // One action answers "is the batch empty?", "what is the folder
-          // watermark?" (= newest folder in this micro-batch — the
-          // reference's per-batch watermark commit) AND "which target
-          // buckets does this change set touch?" — so the merge itself is a
-          // single further action (the bucket write).
-          //
-          // The bucket set is computed from the RAW string key columns —
-          // dedup preserves the key set — but ONLY when every key column is
-          // StringType in the typed schema (see rawKeyBucketsStable); other
-          // key types fall back to collecting buckets from the typed frame
-          // inside merge.
-          val bucketAgg: Option[(Int, org.apache.spark.sql.Column)] =
-            if (table.exists && rawKeyBucketsStable(typedSchema, spec.keyColumns)) {
-              val snap = table.currentSnapshot
-              val n = snap.numBuckets
-              val rawKey = MergeKey.expression(spec.keyColumns.map(raw.col))
-              // the table's OWN bucket fn — hashing with anything else
-              // computes wrong affected buckets and merge's targetBuckets
-              // filter silently drops the staged rows outside them
-              graft.sql.GraftExtensions.ensureRegistered(raw.sparkSession)
-              Some(n -> collect_set(SnapshotTable.bucketColumn(
-                rawKey, n, SnapshotTable.bucketFnOf(snap.properties))))
-            } else None
-          // Watermark = the newest PROCESSED CHUNK's resume point, not just
-          // the newest folder name: a folder split across micro-batches by
-          // admission control commits "folder#chunksDone" until its last
-          // chunk lands, so a restart from the table watermark (checkpoint
-          // lost or absent) resumes the partial folder's remaining chunks
-          // instead of silently skipping them — and external readers of
-          // the mirrored property see honest partial progress.
-          val aggs = Seq(count(lit(1)),
-            max(struct(col("_folder"), col("_chunk_idx"), col("_chunk_last")))) ++ bucketAgg.map(_._2)
-          val head = raw.agg(aggs.head, aggs.tail: _*).head()
-          if (head.getLong(0) > 0) {
-            val w = head.getStruct(1)
-            val wm =
-              if (w.getBoolean(2)) w.getString(0)
-              else s"${w.getString(0)}#${w.getInt(1) + 1}"
-            val affected = bucketAgg.map(_ => head.getSeq[Int](2).toSet)
+          val stageMs = (System.nanoTime() - t0) / 1000000L
+          if (facts.rows > 0) {
             // Content dedup runs AFTER latest-version dedup (keys unique →
             // arcane_merge_key is a valid doc id) and BEFORE the merge; the
-            // affected-bucket set computed from RAW keys is a superset of
-            // the post-dedup keys', which merge tolerates (extra buckets
-            // carry forward unchanged, rows are never dropped).
-            val staged = contentDedupBatch(stage(raw, typedSchema, spec), spec, batchId, table)
+            // affected buckets of the pre-dedup keys are a superset of the
+            // survivors', which merge tolerates (extra buckets carry
+            // forward unchanged, rows are never dropped).
+            val kept = contentDedupBatch(staged, spec, batchId, table)
             // content dedup returns a locally-checkpointed frame, so this
-            // count is a block scan, not a recompute; -1 = dedup disabled
-            // (don't pay an action to log a number equal to `rows`)
-            val stagedRows =
-              if (spec.dedupTextColumn.isDefined) staged.count() else -1L
-            val t0 = System.nanoTime()
+            // count is a block scan, not a recompute
+            val keptRows = if (spec.dedupTextColumn.isDefined) Some(kept.count()) else None
+            val tMerge = System.nanoTime()
             Retry(spec.retry.forContext(backfill = false)) {
-              mergeBatch(table, staged, spec, wm, affected)
+              mergeBatch(table, kept, spec, facts.watermark, facts.affected)
             }
             // Reference parity: the target is ALWAYS externally readable
             // (its sinks are open-format tables any engine reads). Re-export
@@ -425,21 +453,23 @@ object CdcPipeline {
             // scan. export_ms is logged per batch: at stream cadence an
             // export cost creeping toward the trigger interval is the
             // operator's signal, so it must be visible, not inferred.
-            val mergeMs = (System.nanoTime() - t0) / 1000000L
+            val mergeMs = (System.nanoTime() - tMerge) / 1000000L
             val tExp = System.nanoTime()
             spec.exportDir.foreach(table.exportSymlinkManifest)
             spec.icebergExportDir.foreach(d => table.exportIceberg(d))
             spec.deltaExportDir.foreach(d => table.exportDelta(d, spec.deleteBroadcastMaxRows))
             val exportMs = (System.nanoTime() - tExp) / 1000000L
-            JsonLog.info("batch_committed", "batch_id" -> batchId,
-              "rows" -> head.getLong(0), "watermark" -> wm,
-              "affected_buckets" -> affected.map(_.size.toString).getOrElse("all"),
-              "merge_ms" -> mergeMs, "export_ms" -> exportMs,
-              // staged rows AFTER latest-version + content dedup: at stream
-              // cadence the suppression rate (rows - rows_staged) is the
-              // operator's dedup-health signal — a collapse to zero means
-              // a mis-seeded index is suppressing everything
-              "rows_staged" -> stagedRows)
+            JsonLog.info("batch_committed", Seq[(String, Any)]("batch_id" -> batchId,
+              "rows" -> facts.rows, "watermark" -> facts.watermark,
+              "affected_buckets" -> facts.affected.map(_.size.toString).getOrElse("all"),
+              "stage_ms" -> stageMs, "merge_ms" -> mergeMs, "export_ms" -> exportMs,
+              // key-unique rows after latest-version dedup
+              "rows_staged" -> facts.stagedRows) ++
+              // rows left after content dedup: at stream cadence the
+              // suppression (rows_staged - rows_after_content_dedup) is the
+              // operator's dedup-health signal — a collapse to zero means a
+              // mis-seeded index is suppressing everything
+              keptRows.map("rows_after_content_dedup" -> _): _*)
             val batchNumber = batchCounter.incrementAndGet()
             maintenanceTick(table, spec, batchNumber)
             // Band-index maintenance on its own cadence: fold per-batch
@@ -450,7 +480,7 @@ object CdcPipeline {
               graft.streaming.StreamOps.compactBandIndex(
                 raw.sparkSession, spec.dedupIndexLocation.get)
           }
-        } finally raw.unpersist()
+        } finally Checkpoints.release(staged)
       }
     spec.checkpointLocation.foreach(cp => writer.option("checkpointLocation", cp))
     writer.start()

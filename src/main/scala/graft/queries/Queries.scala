@@ -125,18 +125,6 @@ object Queries {
       .map(s => graft.tables.FileStats.parquetRowCount(conf, s.getPath)).sum
   }
 
-  /** Dataset.unpersist is a NO-OP on a localCheckpoint'd frame (it only
-    * clears CacheManager entries, not the checkpoint's persisted RDD
-    * blocks) — release the underlying RDD directly so fixture blocks are
-    * freed when the gate finishes instead of accumulating across queries
-    * until driver GC (cf. Dedup/Graph's releaseCheckpoint).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** The events table's `ts` column has shipped as BOTH parquet
     * TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across data generations, so
     * the reader adapts to the file's physical type instead of assuming
@@ -923,7 +911,7 @@ object Queries {
       tbl.createOrReplace(latestSeg(0).where(!col("is_delete")), "user_id", numBuckets = 32)
       tbl.mergeOnRead(latestSeg(2), "user_id", "event_id", "is_delete")
       tbl.mergeOnRead(latestSeg(1), "user_id", "event_id", "is_delete")
-    } finally releaseCheckpoint(latestAll)
+    } finally graft.ops.Checkpoints.release(latestAll)
     tbl
   }
 
@@ -1165,7 +1153,7 @@ object Queries {
       val state1 = IncrementalAgg.full(tbl.read(), Seq("event_type"), Seq("value"))
       tbl.merge(latestSeg(1), "user_id", "event_id", "is_delete")
       (v1, state1, tbl.currentSnapshot.version)
-    } finally releaseCheckpoint(latestAll)
+    } finally graft.ops.Checkpoints.release(latestAll)
     IncrementalAgg.refresh(state1, tbl, v1, v2, Seq("event_type"), Seq("value"))
       .select(col("event_type"), col("n"),
         col("sum_value").cast("double").as("sum_value"))

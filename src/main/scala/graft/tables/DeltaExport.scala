@@ -490,10 +490,6 @@ object DeltaExport {
       readerVersion, config)
   }
 
-  /** Write the spec checkpoint for the state just committed at `v`, plus
-    * `_last_checkpoint`. One single-part parquet file (coalesce(1) +
-    * rename), so readers do one footer read.
-    */
   /** Tombstone visibility window for checkpoints (the protocol's
     * `delta.deletedFileRetentionDuration` default, 1 week): a checkpoint
     * must CARRY unexpired `remove` actions — dropping them would hide
@@ -502,7 +498,18 @@ object DeltaExport {
     */
   val TombstoneRetentionMs: Long = 7L * 24 * 60 * 60 * 1000
 
-  private def writeCheckpoint(spark: SparkSession, fs: FileSystem, dir: Path, v: Long,
+  /** Write the spec checkpoint for the state just committed at `v`, plus
+    * `_last_checkpoint`. One single-part parquet file, so readers do one
+    * footer read — written on the DRIVER through the parquet-hadoop example
+    * Group API, like [[loadCheckpoint]] reads it: the checkpoint is
+    * KB-scale, and a Spark write job per checkpoint would dominate the
+    * commit that triggers it. The parquet schema is the one Spark's own
+    * writer derives from [[checkpointSchema]] (3-level lists and maps),
+    * which is what Delta readers expect. The file is written beside its
+    * final name and renamed into place, so a reader never sees a partial
+    * file.
+    */
+  private def writeCheckpoint(fs: FileSystem, dir: Path, v: Long,
       tableId: String, schemaString: String, snapshotVersion: Long, timestampMs: Long,
       adds: Seq[(ExportFile, Map[String, Option[String]], Option[DvDescriptor])],
       properties: Map[String, String],
@@ -511,37 +518,75 @@ object DeltaExport {
       // checkpoint must carry the SAME configuration the JSON metaData
       // publishes, or a checkpoint-anchored replay loses the pruning keys
       extraConf: Map[String, String] = Map.empty): Unit = {
-    import org.apache.spark.sql.Row
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
     val conf = properties.toSeq.sortBy(_._1).map { case (k, vv) => (s"graft.$k", vv) }.toMap ++
       extraConf
-    val protoRow =
-      if (readerV >= 3) Row(3, 7, Seq("deletionVectors"), Seq("deletionVectors"))
-      else Row(1, 2, null, null)
-    def dvRow(d: Option[DvDescriptor]): Row = d.map(x =>
-      Row(x.storageType, x.pathOrInlineDv, x.offset, x.sizeInBytes, x.cardinality)).orNull
-    val rows = Seq(
-      Row(Row("graft-export", snapshotVersion), null, null, null, null),
-      Row(null, protoRow, null, null, null),
-      Row(null, null,
-        Row(tableId, Row("parquet", Map.empty[String, String]), schemaString,
-          pcols, conf, timestampMs), null, null)) ++
-      adds.map { case (f, pv, dv) => Row(null, null, null,
-        Row(encodePath(f.uri), pv.map { case (k, ov) => k -> ov.orNull }, f.length,
-          timestampMs, true, statsJson(f), dvRow(dv)), null) } ++
-      tombstones.collect { case (uri, delTs) if timestampMs - delTs <= TombstoneRetentionMs =>
-        Row(null, null, null, null, Row(encodePath(uri), delTs, true))
+    val schema = new SparkToParquetSchemaConverter().convert(checkpointSchema)
+    val factory = new SimpleGroupFactory(schema)
+    def putList(g: Group, field: String, xs: Seq[String]): Unit = {
+      val l = g.addGroup(field)
+      xs.foreach(x => l.addGroup("list").append("element", x))
+    }
+    def putMap(g: Group, field: String, m: Iterable[(String, Option[String])]): Unit = {
+      val kvs = g.addGroup(field)
+      m.foreach { case (k, ov) =>
+        val kv = kvs.addGroup("key_value").append("key", k)
+        ov.foreach(kv.append("value", _))
       }
-    val tmp = new Path(logDir(dir), s".checkpoint-$v-tmp")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), checkpointSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(throw new java.io.IOException(s"no part file under $tmp"))
+    }
+    def action(name: String)(fill: Group => Unit): Group = {
+      val row = factory.newGroup()
+      fill(row.addGroup(name))
+      row
+    }
+    val rows = Seq(
+      action("txn")(_.append("appId", "graft-export").append("version", snapshotVersion)),
+      action("protocol") { p =>
+        if (readerV >= 3) {
+          p.append("minReaderVersion", 3).append("minWriterVersion", 7)
+          putList(p, "readerFeatures", Seq("deletionVectors"))
+          putList(p, "writerFeatures", Seq("deletionVectors"))
+        } else p.append("minReaderVersion", 1).append("minWriterVersion", 2)
+      },
+      action("metaData") { md =>
+        md.append("id", tableId)
+        putMap(md.addGroup("format").append("provider", "parquet"), "options", Nil)
+        md.append("schemaString", schemaString)
+        putList(md, "partitionColumns", pcols)
+        putMap(md, "configuration", conf.map { case (k, vv) => k -> Option(vv) })
+        md.append("createdTime", timestampMs)
+      }) ++
+      adds.map { case (f, pv, dv) => action("add") { ad =>
+        ad.append("path", encodePath(f.uri))
+        putMap(ad, "partitionValues", pv)
+        ad.append("size", f.length).append("modificationTime", timestampMs)
+          .append("dataChange", true).append("stats", statsJson(f))
+        dv.foreach(x => ad.addGroup("deletionVector")
+          .append("storageType", x.storageType).append("pathOrInlineDv", x.pathOrInlineDv)
+          .append("offset", x.offset).append("sizeInBytes", x.sizeInBytes)
+          .append("cardinality", x.cardinality))
+      } } ++
+      tombstones.collect { case (uri, delTs) if timestampMs - delTs <= TombstoneRetentionMs =>
+        action("remove")(_.append("path", encodePath(uri)).append("deletionTimestamp", delTs)
+          .append("dataChange", true))
+      }
     val target = new Path(logDir(dir), checkpointName(v))
+    val tmp = new Path(logDir(dir), s".${checkpointName(v)}.tmp")
+    val writer = ExampleParquetWriter.builder(tmp).withConf(fs.getConf).withType(schema)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of(
+        "org.apache.spark.sql.parquet.row.metadata", checkpointSchema.json))
+      .build()
+    try rows.foreach(writer.write) finally writer.close()
     fs.delete(target, false)
-    if (!fs.rename(part, target))
+    if (!fs.rename(tmp, target))
       throw new java.io.IOException(s"checkpoint publish of $target failed")
-    fs.delete(tmp, true)
     val lc = mapper.createObjectNode()
     lc.put("version", v)
     lc.put("size", rows.size.toLong)
@@ -898,7 +943,7 @@ object DeltaExport {
     // checkpoint failure must not fail a batch whose export succeeded —
     // and because the due-test is "behind by >= interval", the NEXT commit
     // retries instead of waiting a whole interval with replay unbounded.
-    val ckptDue = spark.nonEmpty && nextVersion > 0 &&
+    val ckptDue = nextVersion > 0 &&
       (nextVersion % CheckpointInterval == 0 ||
         nextVersion - listing._2.lastOption.getOrElse(0L) >= CheckpointInterval)
     if (ckptDue) {
@@ -908,7 +953,7 @@ object DeltaExport {
       // removed-and-RE-ADDED paths (a DV change) are live, not tombstones
       val tombstones = prior.map(_.tombstones).getOrElse(Map.empty) ++
         removes.collect { case (u, _) if !nextFiles.contains(u) => u -> timestampMs }
-      try writeCheckpoint(spark.get, fs, exportDir, nextVersion, tableId, schemaString,
+      try writeCheckpoint(fs, exportDir, nextVersion, tableId, schemaString,
         snapshotVersion, timestampMs,
         files.map(f => (f, partitionValuesOf(f), dvDescriptors.get(f.uri))), properties,
         pcols, tombstones, readerV = if (dvDescriptors.nonEmpty || priorReader >= 3) 3 else 1,
